@@ -138,8 +138,7 @@ def sessionize_split(
     """
     if span < 1:
         # SQL `ts div 0` is NULL, which would silently collapse every
-        # row into one NULL slice — fail loudly instead (the
-        # HLA_BFS_CHECKPOINT_EVERY_K validation discipline, r10 advice)
+        # row into one NULL slice — fail loudly instead
         raise ValueError(f"span must be >= 1, got {span}")
     cols = [F.col(c) for c in events.columns] + [F.col("sid")]
 

@@ -22,8 +22,6 @@ observed-metrics certificate from operators/clustering.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -34,6 +32,9 @@ from hadoop_log_analysis_spark.sources.catalog import scan, table_bytes
 
 PR_DAMPING = 0.85
 PR_ITERS = 3
+# q_bfs_hops re-checkpoints its distance table every k levels; read at
+# call time.
+BFS_CHECKPOINT_EVERY_K = 1
 
 
 def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,29 +331,20 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
     # The seed is a 1-row LOCAL frame (no lineage to cut): its eager
-    # checkpoint was a wasted job. The per-level dist re-checkpoint is
-    # KEPT as the default after an A/B (r9, 7-run medians at sf0.1:
-    # eager 1.58 s, lazy 1.76 s, no-checkpoint 2.03 s — per-level
-    # planning over a growing k-way union of blocks costs more locally
-    # than the cheap rewrite of the tiny distance table). At true
-    # scale the trade reverses for DEEP graphs (the rewrite is a full
-    # distance-table pass per level while union-of-blocks is
-    # append-only I/O): HLA_BFS_CHECKPOINT_EVERY_K (default 1 = the
-    # per-level rewrite) re-checkpoints dist only every k levels —
-    # between checkpoints dist stays a lazy union of the per-level
-    # frontier blocks, each of which IS eagerly checkpointed (the
-    # observation rides that job), so plans stay flat either way.
-    # k=2 output proven hash-identical by
-    # tests/test_properties.py::test_bfs_checkpoint_cadence_invariant.
-    # Validate like connected_components' max_iter guard (ADVICE r10
-    # #3): the value is used as a modulus, so 0 would raise
-    # ZeroDivisionError mid-query and a negative would never
-    # checkpoint — reject loudly instead.
-    ckpt_every = int(os.environ.get("HLA_BFS_CHECKPOINT_EVERY_K", "1"))
-    if ckpt_every < 1:
-        raise ValueError(
-            f"HLA_BFS_CHECKPOINT_EVERY_K must be >= 1, got {ckpt_every}"
-        )
+    # checkpoint was a wasted job. The per-level dist re-checkpoint
+    # (BFS_CHECKPOINT_EVERY_K = 1) is the default after an A/B (7-run
+    # medians at sf0.1: eager 1.58 s, lazy 1.76 s, no-checkpoint
+    # 2.03 s — per-level planning over a growing k-way union of blocks
+    # costs more locally than the cheap rewrite of the tiny distance
+    # table). At true scale the trade reverses for DEEP graphs (the
+    # rewrite is a full distance-table pass per level while
+    # union-of-blocks is append-only I/O): k > 1 re-checkpoints dist
+    # only every k levels — between checkpoints dist stays a lazy union
+    # of the per-level frontier blocks, each of which IS eagerly
+    # checkpointed (the observation rides that job), so plans stay flat
+    # either way. Output is k-invariant
+    # (tests/test_properties.py::test_bfs_checkpoint_cadence_invariant).
+    ckpt_every = BFS_CHECKPOINT_EVERY_K
     seed = spark.createDataFrame([("spark", 0)], "tok string, hops int")
     dist = seed
     frontier = seed

@@ -18,6 +18,8 @@ Time crosses engine boundaries as epoch-µs bigints throughout
 from __future__ import annotations
 
 import os
+import shutil
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,13 +30,12 @@ from hadoop_log_analysis_spark.queries import query
 from hadoop_log_analysis_spark.sources.catalog import scan
 from hadoop_log_analysis_spark.streaming.events_stream import (
     TMP,
+    ckpt_path,
     derive_drop_dir,
     read_events_stream,
-    run_foreach_batch_to_parquet,
-    run_to_table,
+    run_drain,
 )
 from hadoop_log_analysis_spark.streaming.skew import (
-    bucket_seconds_env,
     bucketed_interval_join,
     merge_bucketed_left,
 )
@@ -55,39 +56,54 @@ T8_LEFT_BKT_PAYLOAD_TABLE = "t8_stream_left_join_bkt_pl"
 # (too few live buckets at 4I to spread across) — the fixture's hot
 # keys are month-long, and at 100 TB the rule is
 # W ~ active_span / (10 x state-partitions), clamped per SCALE.md.
-# HLA_STREAM_BUCKET_SECONDS overrides for width sweeps; output is
-# width-invariant (driver-hash-enforced by the byte-identical oracles).
+# Output is width-invariant (driver-hash-enforced by the byte-identical
+# oracles); read at call time, so width sweeps set it on the module.
 T8_INTERVAL_SECONDS = 3600
 T8_BUCKET_SECONDS = 4 * T8_INTERVAL_SECONDS
 
 
+@dataclass(frozen=True)
+class Replay:
+    """How a query family replays its drop dir: ``files`` time-ordered
+    drop files, ``mfpt`` of them per microbatch (maxFilesPerTrigger),
+    and ``state_partitions`` state-store tasks for the drain."""
+
+    files: int
+    mfpt: int
+    state_partitions: int = 8
+
+
+# Replay cadence per query family, read at call time. Every drained
+# answer below is a pure function of the replayed data, not of how it
+# is batched (each query says why). The oracle parity tests pin every
+# entry; tests/test_streaming.py also pins most families at a folded
+# 2-file / mFPT=3 replay.
+REPLAY: dict[str, Replay] = {
+    # complete-mode aggregations without a watermark: hourly_errors,
+    # sliding_counts, sessions, ohlc
+    "complete": Replay(8, 2),
+    "dedup": Replay(8, 1),
+    # per-user applyInPandasWithState (stateful_counts, sequence_match):
+    # one Python call per user per batch, which parallelizes with tasks
+    "stateful": Replay(8, 1, 32),
+    "inner_join": Replay(8, 2),
+    # mFPT=1: every sentinel of the left-outer joins is its own batch
+    "left_join": Replay(8, 1),
+    "heavy_hitters": Replay(8, 1),
+    "psi_monitor": Replay(8, 2),
+    # bands x docs tiny bucket groups, see q_stream_minhash_dedup
+    "minhash_dedup": Replay(8, 1, 16),
+    # stateless retrieval over a 4-file query feed (q_stream_knn pair)
+    "knn": Replay(4, 1),
+}
+
+# q_stream_minhash_dedup's bucket groups per band (G): one Python call
+# per (band, group) per batch, see stream_minhash_dup_hits.
+MINHASH_GROUPS_PER_BAND = 128
+
+
 def _us(col):
     return F.unix_micros(col)
-
-
-def _complete_mode_replay() -> tuple[int, int]:
-    """r14 OPTIMIZATION: shared replay-fold knobs for the COMPLETE-mode,
-    no-watermark drains (q_stream_hourly_errors, q_stream_sliding_counts,
-    q_stream_sessions, q_stream_ohlc). Complete mode re-emits the full
-    aggregate each batch and holds no watermark, so the drained result
-    is a pure function of the total replayed data — batching-invariant
-    by the same law the r8 PSI fold used ("complete-mode agg has no
-    watermark, its drained result is batching-invariant"). Defaults =
-    the 8-file/mFPT=2 cadence these four queries ran at for every round
-    before the knobs existed (read_events_stream's historical default —
-    ADVICE r14 low: the r14 knob landed with mFPT=1, silently doubling
-    the default microbatch count from 4 to 8); measurement configs
-    fold further via the envs, and the CI parity test pins the default
-    AND folded cadences. Loud validation per the repo's env-knob
-    discipline."""
-    n_files = int(os.environ.get("HLA_STREAM_COMPLETE_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_COMPLETE_MFPT", "2"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            "HLA_STREAM_COMPLETE_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    return n_files, mfpt
 
 
 @query(
@@ -104,15 +120,17 @@ def _complete_mode_replay() -> tuple[int, int]:
 def q_stream_hourly_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7+T1: tumbling 1-hour window over the error stream, complete
     mode (all windows retained -> deterministic == batch answer)."""
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = REPLAY["complete"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     agg = (
         events.filter(F.col("event_type") == "error")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("errors"))
     )
-    out = run_to_table(agg, "t1_hourly_errors", "complete")
+    out = run_drain(
+        agg, "t1_hourly_errors", "complete", shuffle_partitions=r.state_partitions
+    )
     return out.select(_us(F.col("w.start")).alias("hr_us"), "errors").orderBy("hr_us")
 
 
@@ -132,14 +150,16 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: sliding window (1 h width / 15 min slide) event counts,
     complete mode. Each event lands in 4 overlapping windows; the
     oracle enumerates the same 4 window starts per event."""
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = REPLAY["complete"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     agg = (
         events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_to_table(agg, "t2_sliding", "complete")
+    out = run_drain(
+        agg, "t2_sliding", "complete", shuffle_partitions=r.state_partitions
+    )
     return out.select(_us(F.col("w.start")).alias("ws_us"), "n").orderBy("ws_us")
 
 
@@ -171,15 +191,17 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of batch W6 sessionization, and the oracle IS the
     batch formulation (lag -> break -> running sum -> agg). Spark's
     session_window end = last event + gap, mirrored as +1800000000 µs."""
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = REPLAY["complete"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     agg = (
         events.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
         ).agg(F.count("*").alias("n"))
     )
-    out = run_to_table(agg, "t3_sessions", "complete")
+    out = run_drain(
+        agg, "t3_sessions", "complete", shuffle_partitions=r.state_partitions
+    )
     return out.select(
         "user_id",
         _us(F.col("w.start")).alias("s_start_us"),
@@ -208,7 +230,7 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_to_table(agg, "t4_watermark", "append")
+    out = run_drain(agg, "t4_watermark", "append")
     return out.select(_us(F.col("w.start")).alias("hr_us"), "n").orderBy("hr_us")
 
 
@@ -227,30 +249,21 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     event; ``dropDuplicatesWithinWatermark`` on event_id removes them
     (each dup shares its original's event time, so it always lands
     within the watermark). The deduped stream must equal the original
-    events table — a full SQL oracle on per-type counts."""
-    # r14 OPTIMIZATION: replay-fold knobs (default = the parity-tested
-    # 8-file/mFPT=1 cadence). Folding is sound for THIS op: every
-    # injected duplicate shares its original's event time and sits in
-    # the same time-ordered file slice, so fewer/bigger batches only
-    # make the watermark advance LESS between original and duplicate —
-    # strictly safer for dropDuplicatesWithinWatermark's window — and
-    # deduped rows append in their own batch, so the drained set is
-    # the unique rows under every cadence. Oracle hash parity
-    # re-verified at three cadences (8/1, 2/3, 3/2) + pinned in CI;
-    # measured sf0.1 med-of-3: 3.77 s default -> 1.71 s folded.
-    n_files = int(os.environ.get("HLA_STREAM_T5_DEDUP_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_T5_DEDUP_MFPT", "1"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            "HLA_STREAM_T5_DEDUP_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_dups=True)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    events table — a full SQL oracle on per-type counts.
+
+    Cadence-invariant: every duplicate sits in its original's
+    time-ordered file slice, so fewer, bigger batches only make the
+    watermark advance LESS between original and duplicate, and deduped
+    rows append in their own batch."""
+    r = REPLAY["dedup"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_dups=True)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     deduped = events.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = run_to_table(deduped, "t5_dedup", "append")
+    out = run_drain(
+        deduped, "t5_dedup", "append", shuffle_partitions=r.state_partitions
+    )
     return (
         out.groupBy("event_type")
         .agg(F.count("*").alias("n"), F.countDistinct("event_id").alias("ids"))
@@ -298,34 +311,15 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r2 item 8): still blocked — the container has NO
     ``google.protobuf`` at all (``import google`` ->
     ModuleNotFoundError) and its Arrow-state protocol requires it, so
-    this documented fallback remains the T6 implementation."""
+    this documented fallback remains the T6 implementation.
+
+    The drained answer, max(running count) per user, is the final
+    total under every batching and partition count."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    # r14 OPTIMIZATION (guide §1.2 step 2 / the q_stream_minhash_dedup
-    # sizing law): this drain's cost is per-GROUP Python stateful-
-    # runner overhead — every user present in a batch is one Python
-    # call — which parallelizes with state-task count and shrinks
-    # with batch count (each user re-emits per batch). Replay knobs
-    # (default = the parity-tested 8-file/mFPT=1 cadence) follow the
-    # stream-stream join's pattern; the drained answer is
-    # max(running count) per user = the final total, so it is
-    # batching- AND partition-count-invariant (driver hash parity is
-    # the oracle; re-verified at 4 replay/partition configs incl. 1-
-    # and 2-batch folds). Measured at sf0.1, med-of-3: 12.1 s (8
-    # batches x 8 state tasks) -> 9.7 s (default replay, 32 tasks)
-    # -> 1.7 s (folded replay via the envs, 32 tasks).
-    n_files = int(os.environ.get("HLA_STREAM_COUNTS_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_COUNTS_MFPT", "1"))
-    state_parts = int(
-        os.environ.get("HLA_STREAM_COUNTS_STATE_PARTITIONS", "32")
-    )
-    if n_files < 1 or mfpt < 1 or state_parts < 1:
-        raise ValueError(
-            "HLA_STREAM_COUNTS_DROP_FILES/_MFPT/_STATE_PARTITIONS must "
-            f"be >= 1, got {n_files}/{mfpt}/{state_parts}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = REPLAY["stateful"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     updates = events.groupBy("user_id").applyInPandasWithState(
         _count_state_fn,
         outputStructType=_T6_OUT_SCHEMA,
@@ -333,8 +327,8 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_to_table(
-        updates, "t6_stateful", "update", state_partitions=state_parts
+    out = run_drain(
+        updates, "t6_stateful", "update", shuffle_partitions=r.state_partitions
     )
     return (
         out.groupBy("user_id").agg(F.max("n_so_far").alias("n")).orderBy("user_id")
@@ -364,7 +358,14 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drop = derive_drop_dir(spark, sf_dir)
     events = read_events_stream(spark, drop)
-    run_foreach_batch_to_parquet(events, f"t7_sink_{tag}", out_dir)
+    shutil.rmtree(out_dir, ignore_errors=True)
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").partitionBy("event_type").parquet(
+            os.path.join(out_dir, f"batch_id={batch_id}")
+        )
+
+    run_drain(events, f"t7_sink_{tag}", foreach_batch=write_batch)
     # explicit schema (stream schema + the batch_id partition dir):
     # a drained stream with zero batches reads back as empty, not as
     # an inference failure — quiet days are normal at scale.
@@ -404,20 +405,14 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-order replay (derive_drop_dir stamps file mtimes in ts order)
     advances the watermark monotonically, so the availableNow drain
     emits exactly the batch join's matches — a full-hash oracle, the
-    strongest check a streaming op can carry.
-
-    r13: honors the same HLA_STREAM_JOIN_DROP_FILES / _MFPT replay
-    envs as the left-outer pair (the result is replay-granularity
-    invariant — that IS the parity law — and inner joins need no
-    sentinel flush: matches emit when both rows are present, so
-    folding the replay is always safe); measurement tooling can now
-    compare all four stream-stream joins at one replay config.
+    strongest check a streaming op can carry. Inner joins need no
+    sentinel flush (a match emits once both rows are present), so any
+    replay cadence gives the same answer.
     """
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "2"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
+    r = REPLAY["inner_join"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "2 hours")
         .select(
@@ -427,7 +422,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "2 hours")
         .select(
@@ -442,7 +437,10 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"
         ),
     ).select("click_id", "purchase_id")
-    out = run_to_table(joined, "t8_stream_stream_join", "append")
+    out = run_drain(
+        joined, "t8_stream_stream_join", "append",
+        shuffle_partitions=r.state_partitions,
+    )
     return out.orderBy("click_id", "purchase_id")
 
 
@@ -474,14 +472,11 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     equi-match it (no duplicate pairs), and nothing waits for an
     eviction-time flush — the defense is a pure streaming plan end to
     end. Oracle byte-identical to q_stream_stream_join's (output-
-    invisibility, driver-hash-enforced). Honors the shared
-    HLA_STREAM_JOIN_DROP_FILES / _MFPT replay envs (r13, see
-    q_stream_stream_join)."""
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "2"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
+    invisibility, driver-hash-enforced)."""
+    r = REPLAY["inner_join"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -490,7 +485,7 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -507,10 +502,13 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         right_ts="p_ts",
         interval_seconds=T8_INTERVAL_SECONDS,
         watermark="2 hours",
-        bucket_seconds=bucket_seconds_env(T8_BUCKET_SECONDS),
+        bucket_seconds=T8_BUCKET_SECONDS,
         how="inner",
     ).select("click_id", "purchase_id")
-    out = run_to_table(joined, "t8_stream_stream_join_bkt", "append")
+    out = run_drain(
+        joined, "t8_stream_stream_join_bkt", "append",
+        shuffle_partitions=r.state_partitions,
+    )
     return out.orderBy("click_id", "purchase_id")
 
 
@@ -537,43 +535,33 @@ def q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     no gaps. Verified by hash-match against the batch table.
     """
     import glob
-    import shutil
 
     drop = derive_drop_dir(spark, sf_dir)
     tag = os.path.basename(os.path.normpath(sf_dir))
     app = spark.sparkContext.applicationId
     stage = os.path.join(TMP, f"recovery_stage_{tag}_{app}")
     out = os.path.join(TMP, f"recovery_out_{tag}_{app}")
-    ckpt = os.path.join(TMP, f"stream_ckpt_recovery_{tag}_{app}")
+    ckpt = ckpt_path(f"recovery_{tag}", app)
     for p in (stage, out, ckpt):
         shutil.rmtree(p, ignore_errors=True)
     os.makedirs(stage)
     files = sorted(glob.glob(os.path.join(drop, "part-*.json")))
 
-    def drain_once() -> None:
-        events = read_events_stream(spark, stage, max_files_per_trigger=1)
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            # batchId-keyed overwrite = idempotent under at-least-once
-            # replay; the directory doubles as a partition column on read.
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={batch_id}")
-            )
-
-        q = (
-            events.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # batchId-keyed overwrite = idempotent under at-least-once
+        # replay; the directory doubles as a partition column on read.
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(out, f"batch_id={batch_id}")
         )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise RuntimeError(
-                "checkpoint-recovery drain did not finish within 300s; "
-                "sink would be partial"
-            )
+
+    def drain_once() -> None:
+        run_drain(
+            read_events_stream(spark, stage, max_files_per_trigger=1),
+            f"recovery_{tag}",
+            foreach_batch=write_batch,
+            checkpoint=ckpt,
+            shuffle_partitions=None,
+        )
 
     half = len(files) // 2
     for f in files[:half]:
@@ -625,7 +613,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value") > F.col("av")
     )
     counts = joined.groupBy("event_type").agg(F.count("*").alias("n_above"))
-    out = run_to_table(counts, "t8_stream_static", "complete")
+    out = run_drain(counts, "t8_stream_static", "complete")
     return out.orderBy("event_type")
 
 
@@ -666,31 +654,17 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle) — the stream-batch parity law applied to outer-join
     semantics.
 
-    Wall-time is ~N_microbatches x ~1.3 s FIXED scheduling cost, not
-    data volume (VERDICT r4 plan audit) — the same overhead amortizes
-    over multi-GB batches on a cluster. HLA_STREAM_JOIN_DROP_FILES
-    (default 8) sets the replay granularity: the bench uses 2 larger
-    files to cut the local drain from ~24 to ~7 microbatches, the
-    parity tests keep 8 so batch boundaries stay exercised. The
-    drained result is identical either way (it must hash-match the
-    batch join regardless of how the feed is sliced — that IS the
-    parity law). HLA_STREAM_JOIN_MFPT (default 1) sets
-    maxFilesPerTrigger: the parity tests keep 1 so every file is its
-    own microbatch and the 3-sentinel watermark cadence
-    (derive_drop_dir) is exercised at its finest granularity; the
-    bench uses 3, folding the 2-data-file replay to TWO microbatches
-    ([d1,d2,s1],[s2,s3]) — correctness only needs SOME batch to
-    execute after a batch that saw a sentinel (watermark from batch N
-    binds in batch N+1), and with 2 data files at mFPT=3 the last two
-    sentinels can never share the final data batch, so the flush
-    batch is guaranteed. Hash parity vs the DuckDB oracle re-verified
-    at sf0.1 for mFPT 1, 2, and 3 (3 runs each).
+    Cadence: correctness only needs SOME batch to execute after a
+    batch that saw a sentinel (the watermark from batch N binds in
+    batch N+1). The shipped mFPT=1 gives every sentinel its own
+    batch. A folded 2-file / mFPT=3 replay packs the feed into
+    [d1,d2,s1],[s2,s3], where the last two sentinels can never share
+    the final data batch, so the flush batch is still guaranteed.
     """
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "1"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_sentinel=True)
+    r = REPLAY["left_join"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .withWatermark("ts", "2 hours")
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
@@ -700,7 +674,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .withWatermark("ts", "2 hours")
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
@@ -716,7 +690,9 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     ).select("click_id", "purchase_id")
-    out = run_to_table(joined, T8_LEFT_TABLE, "append")
+    out = run_drain(
+        joined, T8_LEFT_TABLE, "append", shuffle_partitions=r.state_partitions
+    )
     return (
         out.filter(F.col("click_id") >= 0)
         .orderBy("click_id", "purchase_id")
@@ -763,11 +739,10 @@ def q_stream_stream_left_join_bucketed(
     merge; user_id=-1 never equi-matches). State-spread effect is
     measured by scripts/stream_state_skew.py (plain vs bucketed).
     """
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "1"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_sentinel=True)
+    r = REPLAY["left_join"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
             F.col("event_id").alias("click_id"),
@@ -776,7 +751,7 @@ def q_stream_stream_left_join_bucketed(
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -793,9 +768,11 @@ def q_stream_stream_left_join_bucketed(
         right_ts="p_ts",
         interval_seconds=T8_INTERVAL_SECONDS,
         watermark="2 hours",
-        bucket_seconds=bucket_seconds_env(T8_BUCKET_SECONDS),
+        bucket_seconds=T8_BUCKET_SECONDS,
     ).select("click_id", "purchase_id")
-    out = run_to_table(joined, T8_LEFT_BKT_TABLE, "append")
+    out = run_drain(
+        joined, T8_LEFT_BKT_TABLE, "append", shuffle_partitions=r.state_partitions
+    )
     return merge_bucketed_left(
         out.filter(F.col("click_id") >= 0), "click_id", "purchase_id"
     ).orderBy("click_id", "purchase_id")
@@ -831,11 +808,10 @@ def q_stream_stream_left_join_bucketed_payload(
     multiset-exact in the unit sweep (tests/test_properties.py
     ``test_merge_bucketed_left_carries_payload_cols``). Time crosses
     the engine boundary as epoch-µs (module docstring)."""
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "1"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_sentinel=True)
+    r = REPLAY["left_join"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
             F.col("event_id").alias("click_id"),
@@ -844,7 +820,7 @@ def q_stream_stream_left_join_bucketed_payload(
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -861,9 +837,12 @@ def q_stream_stream_left_join_bucketed_payload(
         right_ts="p_ts",
         interval_seconds=T8_INTERVAL_SECONDS,
         watermark="2 hours",
-        bucket_seconds=bucket_seconds_env(T8_BUCKET_SECONDS),
+        bucket_seconds=T8_BUCKET_SECONDS,
     ).select("click_id", "c_ts", "purchase_id")
-    out = run_to_table(joined, T8_LEFT_BKT_PAYLOAD_TABLE, "append")
+    out = run_drain(
+        joined, T8_LEFT_BKT_PAYLOAD_TABLE, "append",
+        shuffle_partitions=r.state_partitions,
+    )
     merged = merge_bucketed_left(
         out.filter(F.col("click_id") >= 0),
         "click_id",
@@ -947,26 +926,15 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream": state is k counters per shard (KBs), each microbatch
     does vectorized value_counts + an O(k log k) merge, and the exact
     recount runs only when a report is cut.
+
+    Cadence-invariant although Misra-Gries emissions are not: the
+    exact recount filters whatever extra candidates a cadence emits,
+    and every true heavy hitter is in the final summary under every
+    batching.
     """
-    # r14 OPTIMIZATION: replay-fold knobs (defaults = the parity
-    # cadence). Folding is sound DESPITE Misra-Gries emissions being
-    # cadence-dependent: the final answer is the exact recount
-    # thresholded at n/(k+1), so extra candidates any cadence emits
-    # are filtered out, and every TRUE heavy hitter (shard freq >
-    # shard_n/(k+1) since an item's whole stream hits one shard) is
-    # in the final MG state — hence in the drained union — under
-    # EVERY batching. Oracle hash parity re-verified at both
-    # cadences + pinned in CI. Measured sf0.1 med-of-3:
-    # 6.09 s default -> 2.02 s folded.
-    n_files = int(os.environ.get("HLA_STREAM_HH_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_HH_MFPT", "1"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            f"HLA_STREAM_HH_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    ev = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = REPLAY["heavy_hitters"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    ev = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     sharded = ev.select(
         F.col("event_type").alias("item"),
         F.pmod(F.xxhash64("event_type"), F.lit(8)).alias("shard"),
@@ -981,7 +949,10 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     cands = (
-        run_to_table(updates, "t6_stream_hh", "update")
+        run_drain(
+            updates, "t6_stream_hh", "update",
+            shuffle_partitions=r.state_partitions,
+        )
         .select("item")
         .distinct()
     )
@@ -1025,7 +996,6 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_log_analysis_spark.sources.pydatasource import (
         AppLogStreamDataSource,
     )
-    from hadoop_log_analysis_spark.streaming.events_stream import run_to_table
 
     path = _derived_dir(sf_dir, "textlog")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -1047,7 +1017,7 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drain the typed rows append-mode and aggregate exactly on the
     # drained batch — the streaming-transport / batch-finishing split
     # the foreachBatch sink queries also use.
-    typed = run_to_table(stream, "t_stream_pysrc", "append")
+    typed = run_drain(stream, "t_stream_pysrc", "append")
     return (
         typed.groupBy("event_type")
         .agg(
@@ -1098,7 +1068,6 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned by retention.
     """
     import glob as _glob
-    import shutil
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     state_root = os.path.join(
@@ -1106,11 +1075,6 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root, exist_ok=True)
-    ckpt = os.path.join(
-        TMP,
-        f"stream_ckpt_cdc_apply_{tag}_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     drop = derive_drop_dir(spark, sf_dir)
     events = read_events_stream(spark, drop)
@@ -1159,16 +1123,10 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         _us(F.col("ts")).alias("ts_us"),
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_drain(
+        stream, f"cdc_apply_{tag}", foreach_batch=apply_batch,
+        shuffle_partitions=None,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("cdc apply stream did not drain in 300s")
 
     versions = _latest_versions()
     if not versions:  # zero-batch drain (empty fixture) -> empty result
@@ -1219,19 +1177,21 @@ def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Complete-mode agg with no watermark: the drained result is
-    # batching-invariant, so the bench replays fewer/larger files to
-    # cut the fixed per-microbatch cost (HLA_STREAM_PSI_DROP_FILES=2
-    # -> 1 microbatch); parity tests keep the 8-file default where
-    # incremental state updates are the point.
-    n_files = int(os.environ.get("HLA_STREAM_PSI_DROP_FILES", "8"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
+    # batching-invariant.
+    r = REPLAY["psi_monitor"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     ev = scan(spark, sf_dir, "events")
     b = _psi_reference(ev).localCheckpoint(eager=True)  # snapshot once
     cut = F.lit(_PSI_CUT).cast("timestamp")
-    stream = read_events_stream(spark, drop).filter(F.col("ts") >= cut).select(
-        "event_type", "value"
+    stream = (
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        .filter(F.col("ts") >= cut)
+        .select("event_type", "value")
     )
-    cb = run_to_table(_psi_binned(stream, b), "psi_monitor", "complete")
+    cb = run_drain(
+        _psi_binned(stream, b), "psi_monitor", "complete",
+        shuffle_partitions=r.state_partitions,
+    )
     cut_ref = F.lit(_PSI_CUT).cast("timestamp")
     rb = _psi_binned(
         ev.filter(F.col("ts") < cut_ref).select("event_type", "value"), b
@@ -1316,32 +1276,13 @@ def q_stream_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    # r14 OPTIMIZATION: same cost law and same knobs as
-    # q_stream_stateful_counts — per-group Python overhead x batch
-    # count dominates (every user re-emits per batch). Folding the
-    # replay is sound HERE because the state fn sorts each batch's
-    # rows by (ts, event_id) before appending (the concatenated seq
-    # string is identical under any batching of the time-ordered
-    # files) and the drained answer takes the per-user max of
-    # emissions, which the docstring's monotonicity argument makes
-    # the final value under every cadence. Partition count only moves
-    # WHERE a user's state lives. Driver hash parity is the oracle
-    # (re-verified at 4 replay/partition configs incl. 1- and 2-batch
-    # folds). Measured at sf0.1, med-of-3: 12.1 s (8 batches x 8
-    # state tasks) -> 9.6 s (default replay, 32 tasks) -> 1.8 s
-    # (folded replay via the envs, 32 tasks).
-    n_files = int(os.environ.get("HLA_STREAM_SEQ_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_SEQ_MFPT", "1"))
-    state_parts = int(
-        os.environ.get("HLA_STREAM_SEQ_STATE_PARTITIONS", "32")
-    )
-    if n_files < 1 or mfpt < 1 or state_parts < 1:
-        raise ValueError(
-            "HLA_STREAM_SEQ_DROP_FILES/_MFPT/_STATE_PARTITIONS must "
-            f"be >= 1, got {n_files}/{mfpt}/{state_parts}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    ev = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    # Cadence-invariant: the state fn sorts each batch's rows by (ts,
+    # event_id) before appending, so the concatenated string is the
+    # same under any batching of the time-ordered files, and the
+    # per-user max of emissions is its final value (see above).
+    r = REPLAY["stateful"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    ev = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     updates = ev.groupBy("user_id").applyInPandasWithState(
         _seq_state_fn,
         outputStructType=_SEQ_OUT_SCHEMA,
@@ -1349,8 +1290,8 @@ def q_stream_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_to_table(
-        updates, "t6_stream_seq", "update", state_partitions=state_parts
+    out = run_drain(
+        updates, "t6_stream_seq", "update", shuffle_partitions=r.state_partitions
     )
     return (
         out.groupBy("user_id")
@@ -1401,9 +1342,9 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain IS µs, so the fold multiplies the raw epoch (safe: 1.7e17
     < 2^63).
     """
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = REPLAY["complete"]
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     k = subus_key(F.unix_micros(F.col("ts")))
     agg = (
         events.filter(F.col("event_type") == "purchase")
@@ -1418,7 +1359,9 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_sum("value").alias("volume"),
         )
     )
-    out = run_to_table(agg, "t1_ohlc", "complete")
+    out = run_drain(
+        agg, "t1_ohlc", "complete", shuffle_partitions=r.state_partitions
+    )
     return out.select(
         _us(F.col("w.start")).alias("hr_us"),
         "open",
@@ -1463,61 +1406,21 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_minhash_dup_hits,
     )
 
-    # Replay-granularity knobs, the stream-stream join's pattern.
-    # Unlike the join, folding is NOT this op's lever — r14 isolation
-    # measured 92.3 s unfolded vs 96.3 s folded at 2 state partitions
-    # (per-microbatch fixed cost is a minor term here); the dominant
-    # cost is per-group Python overhead, fixed by the state-partition
-    # sizing below. The knobs exist so timing runs can still control
-    # replay shape; the drained result is replay-invariant (greedy-
-    # parity test pins three configs incl. the folded one).
-    n_files = int(os.environ.get("HLA_STREAM_DEDUP_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_DEDUP_MFPT", "1"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            f"HLA_STREAM_DEDUP_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    drop = derive_docs_drop_dir(spark, sf_dir, n_files=n_files)
-    # r15 OPTIMIZATION: coarsen the stateful grouping from one Python
-    # call per (band, bucket) — ~80k calls per batch at sf0.1, the
-    # measured dominant cost — to one per (band, pmod(bucket, G)).
-    # The bucket -> group mapping is key-pure so the greedy answer is
-    # unchanged (CI pins the multiset against the per-bucket path's
-    # simulation at two cadences); G trades Python-call count against
-    # group-rewrite granularity (stream_minhash_dup_hits docstring).
-    # Measured at sf0.1 (bench envs, med-of-3): 13.5 s per-bucket ->
-    # see OPTIMIZATION_r15.md. G=0 disables (per-bucket shape).
-    groups = int(os.environ.get("HLA_STREAM_DEDUP_GROUPS_PER_BAND", "128"))
-    if groups < 0:
-        raise ValueError(
-            f"HLA_STREAM_DEDUP_GROUPS_PER_BAND must be >= 0, got {groups}"
-        )
+    # The stateful grouping is (band, pmod(bucket, G)) rather than one
+    # group per bucket: the bucket -> group mapping is key-pure, so the
+    # greedy answer is unchanged, and the per-group Python call cost
+    # amortizes over the group's buckets. State partitions run opposite
+    # to the joins': this op holds many tiny groups whose Python cost
+    # parallelizes with task count. The drained result is invariant
+    # under replay cadence, G and partition count.
+    r = REPLAY["minhash_dedup"]
+    drop = derive_docs_drop_dir(spark, sf_dir, n_files=r.files)
     hits = stream_minhash_dup_hits(
-        read_docs_stream(spark, drop, mfpt),
-        groups_per_band=groups or None,
+        read_docs_stream(spark, drop, r.mfpt),
+        groups_per_band=MINHASH_GROUPS_PER_BAND,
     )
-    # State-partition sizing is the OPPOSITE of the stream-stream
-    # join's: the join holds few keys with big state (8 partitions
-    # amortize its per-task fixed cost), while this op holds
-    # bands x docs TINY groups whose cost is the per-group Python
-    # stateful-runner overhead — which parallelizes with task count.
-    # r14 isolation at sf0.1 (80k groups): 2 partitions -> 96 s,
-    # 16 -> 12.6 s, same drained result (hash parity is partition-
-    # count invariant; greedy test pins the multiset). With the r15
-    # grouped path the per-group cost amortizes inside each call, so
-    # the partition count matters far less — the knob stays for the
-    # per-bucket (G=0) shape.
-    state_parts = int(
-        os.environ.get("HLA_STREAM_DEDUP_STATE_PARTITIONS", "16")
-    )
-    if state_parts < 1:
-        raise ValueError(
-            f"HLA_STREAM_DEDUP_STATE_PARTITIONS must be >= 1, "
-            f"got {state_parts}"
-        )
-    out = run_to_table(
-        hits, "t5_minhash_dedup", "append", state_partitions=state_parts
+    out = run_drain(
+        hits, "t5_minhash_dedup", "append", shuffle_partitions=r.state_partitions
     )
     return (
         out.groupBy("doc_id")
@@ -1569,7 +1472,7 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_log_analysis_spark.streaming.retrieval import (
         derive_query_drop_dir,
         read_query_stream,
-        run_stream_knn,
+        stream_knn,
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
@@ -1577,24 +1480,16 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         TMP, f"stream_knn_{tag}_{spark.sparkContext.applicationId}"
     )
     corpus = scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    drop = derive_query_drop_dir(spark, sf_dir)
-    # r14 OPTIMIZATION: retrieval is STATELESS (module docstring), so
-    # the drain cost is pure microbatch count x foreachBatch fixed
-    # cost and the result is batch-boundary invariant — already
-    # CI-pinned at two mFPT widths (test_stream_knn_batch_boundary_
-    # invariant). The replay-fold knob (default = the parity-tested
-    # 1-file cadence) lets measurement configs collapse the 4 batches
-    # to 1: sf0.1 med-of-3 4.89 s -> 2.98 s. Same pattern as the
-    # stream-stream join's HLA_STREAM_JOIN_MFPT.
-    mfpt = int(os.environ.get("HLA_STREAM_KNN_MFPT", "1"))
-    if mfpt < 1:
-        raise ValueError(f"HLA_STREAM_KNN_MFPT must be >= 1, got {mfpt}")
-    result = run_stream_knn(
-        read_query_stream(spark, drop, mfpt),
+    # Retrieval is stateless, so the result is batch-boundary invariant.
+    r = REPLAY["knn"]
+    drop = derive_query_drop_dir(spark, sf_dir, n_files=r.files)
+    result = stream_knn(
+        read_query_stream(spark, drop, r.mfpt),
         corpus,
         k=10,
         name=f"t8_knn_{tag}",
         out_dir=out_dir,
+        shuffle_partitions=r.state_partitions,
     )
     return result.orderBy("q_id", "rn")
 
@@ -1629,7 +1524,7 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_log_analysis_spark.streaming.retrieval import (
         derive_query_drop_dir,
         read_query_stream,
-        run_stream_knn,
+        stream_knn,
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
@@ -1640,15 +1535,10 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", "label"
     )
     cents = ivf_centroids(corpus)
-    drop = derive_query_drop_dir(spark, sf_dir)
-    # Same stateless-drain fold knob as q_stream_knn (per-batch IVF
-    # routing is a pure function of the batch; multiset parity vs the
-    # batch ranker is the CI pin). sf0.1 med-of-3: 3.89 s -> 1.66 s.
-    mfpt = int(os.environ.get("HLA_STREAM_KNN_MFPT", "1"))
-    if mfpt < 1:
-        raise ValueError(f"HLA_STREAM_KNN_MFPT must be >= 1, got {mfpt}")
-    result = run_stream_knn(
-        read_query_stream(spark, drop, mfpt),
+    r = REPLAY["knn"]
+    drop = derive_query_drop_dir(spark, sf_dir, n_files=r.files)
+    result = stream_knn(
+        read_query_stream(spark, drop, r.mfpt),
         corpus,
         k=10,
         name=f"t8_knn_ivf_{tag}",
@@ -1656,5 +1546,6 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranker=lambda batch_df: ivf_topk_multi(
             batch_df, corpus, cents, k=10, n_probe=2
         ),
+        shuffle_partitions=r.state_partitions,
     )
     return result.orderBy("q_id", "rn")

@@ -114,11 +114,6 @@ def scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Scan every curated table (used by tests and view registration)."""
-    return {t: scan(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
     """Register temp views for the SQL entry path (SURVEY.md §3.2.3)."""
     for t in TABLES:

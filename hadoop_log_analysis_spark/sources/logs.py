@@ -62,10 +62,3 @@ def parse_app_log(lines: DataFrame) -> DataFrame:
         F.element_at(parts, 4).alias("event_type"),
         F.element_at(parts, 5).alias("props"),
     )
-
-
-def malformed_count(lines: DataFrame) -> DataFrame:
-    """Side-output accounting: how many lines failed the parse."""
-    return lines.filter(~F.col("value").rlike(APP_LOG_PATTERN)).agg(
-        F.count("*").alias("n_malformed")
-    )

@@ -57,9 +57,6 @@ the full greedy answer.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -68,7 +65,7 @@ from hadoop_log_analysis_spark.operators.dedup import (
     band_hash_expr,
     minhash_signature,
 )
-from hadoop_log_analysis_spark.streaming.events_stream import TMP, _tag, stamp_replay_order
+from hadoop_log_analysis_spark.streaming.events_stream import cached_drop
 
 # Synthetic arrival clock for the documents fixture (it has no event
 # time): doc_id seconds after 2024-01-01T00:00:00Z. Strictly
@@ -94,31 +91,25 @@ def derive_docs_drop_dir(
     Same replay scheme as events_stream.derive_drop_dir: files are
     range-partitioned on ts_us (file 0 = earliest) and mtime-stamped
     strictly increasing, so a maxFilesPerTrigger stream replays the
-    feed in arrival order. Built once per sf; deterministic content.
+    feed in arrival order. Built once per input; deterministic content.
     """
     from hadoop_log_analysis_spark.sources.catalog import scan
 
-    path = os.path.join(TMP, f"docs_drop_{n_files}f_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_READY")
-    if os.path.exists(marker):
-        return path
-    shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
+        docs = scan(spark, sf_dir, "documents").select(
+            "doc_id",
+            (F.lit(DOCS_BASE_US) + F.col("doc_id") * 1_000_000).alias("ts_us"),
+            "text",
+            "source",
+        )
+        (
+            docs.repartitionByRange(n_files, "ts_us")
+            .sortWithinPartitions("ts_us")
+            .write.mode("overwrite")
+            .json(path)
+        )
 
-    docs = scan(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.lit(DOCS_BASE_US) + F.col("doc_id") * 1_000_000).alias("ts_us"),
-        "text",
-        "source",
-    )
-    (
-        docs.repartitionByRange(n_files, "ts_us")
-        .sortWithinPartitions("ts_us")
-        .write.mode("overwrite")
-        .json(path)
-    )
-    stamp_replay_order(path)
-    open(marker, "w").close()
-    return path
+    return cached_drop(f"docs_drop_{n_files}f", sf_dir, build)
 
 
 def read_docs_stream(

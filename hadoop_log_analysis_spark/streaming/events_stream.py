@@ -21,8 +21,11 @@ not one giant batch.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +33,10 @@ from pyspark.sql import types as T
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TMP = os.path.join(_REPO, ".tmp")
+
+# Drain deadline: a harness bound, not part of any query's semantics.
+# Read at call time, so a long probe run can raise it on the module.
+DRAIN_TIMEOUT_S = 300
 
 # JSON-lines drop schema: ts as epoch-µs bigint (see module docstring).
 DROP_SCHEMA = T.StructType(
@@ -43,19 +50,16 @@ DROP_SCHEMA = T.StructType(
 )
 
 
-def _tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir))
-
-
-def stamp_replay_order(path: str) -> tuple[int, float]:
-    """mtime-stamp a drop dir's part files strictly increasing in part
-    order. The file source replays files in modification-time order; a
-    single batch write stamps them identically, which would randomize
-    replay order and break every time-ordered-replay contract (T4/T5
-    watermarks, first-seen dedup, the bucketed joins' sentinels). Part
-    numbering follows repartitionByRange order, so part-00000 is the
-    earliest time slice. Returns (n_parts, base_mtime) so callers that
-    append marker files (the sentinel writer) can stamp past the end."""
+def stamp_replay_order(path: str) -> None:
+    """mtime-stamp a drop dir's ``part-*.json`` files strictly increasing
+    in name order. The file source replays files in modification-time
+    order; a single batch write stamps them identically, which would
+    randomize replay order and break every time-ordered-replay contract
+    (T4/T5 watermarks, first-seen dedup, the outer joins' sentinels).
+    Part numbering follows repartitionByRange order, so part-00000 is
+    the earliest time slice, and sentinel files (``part-zz-…``) sort
+    last. Idempotent on a stamped dir; repairs one whose mtimes were
+    flattened (``cp -r``, archive extraction)."""
     parts = sorted(
         f for f in os.listdir(path) if f.startswith("part-") and f.endswith(".json")
     )
@@ -65,9 +69,37 @@ def stamp_replay_order(path: str) -> tuple[int, float]:
         else os.path.getmtime(path)
     )
     for i, f in enumerate(parts):
-        full = os.path.join(path, f)
-        os.utime(full, (base + 10 * i, base + 10 * i))
-    return len(parts), base
+        os.utime(os.path.join(path, f), (base + 10 * i, base + 10 * i))
+
+
+def cached_drop(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
+    """The replay drop dir ``kind`` derived from the input ``sf_dir``,
+    built by ``build(path)`` on first use and cached under ``.tmp``.
+
+    The cache entry is named after the input's basename plus a hash of
+    its resolved path, and its ``_READY`` marker records that path, so
+    two inputs sharing a basename never share an entry. Replay order
+    lives only in the files' mtimes, so every hit re-applies
+    :func:`stamp_replay_order`: a cached dir whose mtimes were
+    flattened replays in order again instead of silently changing the
+    answer."""
+    src = os.path.realpath(sf_dir)
+    digest = hashlib.sha1(src.encode()).hexdigest()[:8]
+    path = os.path.join(
+        TMP, f"{kind}_{os.path.basename(os.path.normpath(sf_dir))}_{digest}"
+    )
+    marker = os.path.join(path, "_READY")
+    if os.path.exists(marker):
+        with open(marker) as fh:
+            if fh.read() == src:
+                stamp_replay_order(path)
+                return path
+    shutil.rmtree(path, ignore_errors=True)
+    build(path)
+    stamp_replay_order(path)
+    with open(marker, "w") as fh:
+        fh.write(src)
+    return path
 
 
 def derive_drop_dir(
@@ -82,7 +114,8 @@ def derive_drop_dir(
     Files are range-partitioned on ts (file 0 = earliest slice), so a
     ``maxFilesPerTrigger=1`` stream replays the month in order —
     watermarks advance monotonically like they would against a live
-    feed. Built once per (sf, variant); deterministic content.
+    feed. Built once per (input, variant, n_files); deterministic
+    content.
 
     ``with_dups``: additionally duplicate one in every 20 events
     (deterministic ``event_id % 20 == 0`` rule) for T5 dedup.
@@ -108,37 +141,26 @@ def derive_drop_dir(
     variant = ("dups" if with_dups else "plain") + (
         "_sentinel" if with_sentinel else ""
     )
-    # n_files is part of the cache key: the bench replays the
-    # stream-stream join over fewer/larger files to amortize the fixed
-    # per-microbatch cost (VERDICT r4 item 7) while the parity tests
-    # keep the default 8-file replay where batch boundaries are the
-    # point. Same data, same drained result either way.
-    path = os.path.join(TMP, f"stream_drop_{variant}_{n_files}f_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_READY")
-    if os.path.exists(marker):
-        return path
-    shutil.rmtree(path, ignore_errors=True)
 
-    events = scan(spark, sf_dir, "events").select(
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    if with_dups:
-        dups = events.filter(F.col("event_id") % 20 == 0)
-        events = events.unionByName(dups)
-    (
-        events.repartitionByRange(n_files, "ts_us")
-        .sortWithinPartitions("ts_us", "event_id")
-        .write.mode("overwrite")
-        .json(path)
-    )
-    n_parts, base = stamp_replay_order(path)
-    if with_sentinel:
-        import json as _json
-
+    def build(path: str) -> None:
+        events = scan(spark, sf_dir, "events").select(
+            "event_id",
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+            "user_id",
+            "event_type",
+            "value",
+        )
+        if with_dups:
+            dups = events.filter(F.col("event_id") % 20 == 0)
+            events = events.unionByName(dups)
+        (
+            events.repartitionByRange(n_files, "ts_us")
+            .sortWithinPartitions("ts_us", "event_id")
+            .write.mode("overwrite")
+            .json(path)
+        )
+        if not with_sentinel:
+            return
         # coalesce to epoch 0 on an empty feed: the sentinels still
         # advance the watermark and flush (empty) outer-join state.
         max_us = events.agg(
@@ -153,7 +175,8 @@ def derive_drop_dir(
         # costing one more batch (observed: 2 sentinels left the join's
         # min-watermark at max_real_ts - delay). Three guarantee the
         # last executed batch runs with watermark >= sentinel-1 - delay
-        # even under a one-file source offset.
+        # even under a one-file source offset. Their names sort after
+        # every data part, so stamp_replay_order replays them last.
         for j in (1, 2, 3):
             sentinel = {
                 "event_id": -j,
@@ -164,11 +187,9 @@ def derive_drop_dir(
             }
             sfile = os.path.join(path, f"part-zz-sentinel-{j}.json")
             with open(sfile, "w") as fh:
-                fh.write(_json.dumps(sentinel) + "\n")
-            t = base + 10 * (n_parts + j)
-            os.utime(sfile, (t, t))
-    open(marker, "w").close()
-    return path
+                fh.write(json.dumps(sentinel) + "\n")
+
+    return cached_drop(f"stream_drop_{variant}_{n_files}f", sf_dir, build)
 
 
 def read_events_stream(
@@ -195,136 +216,73 @@ def read_events_stream(
 
 
 def ckpt_path(name: str, app_id: str) -> str:
-    """The checkpoint directory ``run_to_table`` /
-    ``run_foreach_batch_to_parquet`` use for a given sink table name
-    and Spark application id. Shared so measurement tooling
+    """The checkpoint directory :func:`run_drain` uses for a given
+    stream name and Spark application id. Shared so measurement tooling
     (scripts/stream_state_skew.py) derives the SAME path instead of
     hard-coding the convention — a rename there must break loudly,
-    not silently profile an empty directory (ADVICE r12)."""
+    not silently profile an empty directory."""
     return os.path.join(TMP, f"stream_ckpt_{name}_{app_id}")
 
 
-def _drain_timeout(default_sec: int) -> int:
-    """HLA_STREAM_DRAIN_TIMEOUT_SEC raises the drain deadline on slow
-    or noisy hosts (r12: the heaviest skew-probe drain sits near 300 s
-    and crossed it under host-neighbor jitter — a timeout is a HARNESS
-    bound, not part of any query's semantics). Validated like
-    HLA_BFS_CHECKPOINT_EVERY_K: a nonsensical value must fail loudly,
-    not silently hang or zero out."""
-    env_to = os.environ.get("HLA_STREAM_DRAIN_TIMEOUT_SEC")
-    if env_to is None:
-        return default_sec
-    val = int(env_to)
-    if val < 1:
-        raise ValueError(
-            f"HLA_STREAM_DRAIN_TIMEOUT_SEC must be >= 1, got {env_to}"
-        )
-    return val
-
-
-def run_to_table(
+def run_drain(
     sdf: DataFrame,
     name: str,
-    output_mode: str,
-    timeout_sec: int = 300,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain a streaming DataFrame to completion; return the result.
+    output_mode: str = "append",
+    *,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+    shuffle_partitions: int | None = 8,
+) -> DataFrame | None:
+    """Drain a streaming DataFrame to completion.
 
     ``trigger(availableNow=True)`` processes everything currently in
-    the drop dir as real incremental microbatches (bounded by the
+    the source as real incremental microbatches (bounded by the
     source's maxFilesPerTrigger) then stops — the deterministic way to
-    verify a streaming pipeline. Memory sink; checkpoint under .tmp,
-    cleared per run (stale checkpoints no-op re-runs).
+    verify a streaming pipeline.
 
-    ``state_partitions`` sizes the state-store TASK COUNT to the
-    (tiny) state volume for the duration of the drain — exactly the
-    sizing a production job makes (BASELINE.md r5 addendum: the
-    per-microbatch cost of these bounded replays is state tasks, not
-    data; 32 -> 8 partitions took the stream-stream join 22.8 -> 7.5 s
-    and a bare 200-partition driver session pays 25x that). The
-    partition count is pinned at the checkpoint's batch 0 — the
-    checkpoint is fresh per run, so the conf applies — and is
-    restored right after the drain; results are partition-count
-    invariant (hash-parity is the oracle on every streaming query).
+    Sink: without ``foreach_batch`` the rows land in the memory table
+    ``name``, which is returned. With it, every microbatch goes to the
+    callback — the production fan-out sink, at-least-once, so callers
+    key their output on ``batch_id`` and overwrite — and None is
+    returned.
+
+    ``checkpoint``: by default a fresh per-application directory
+    (:func:`ckpt_path`), cleared first, since a stale checkpoint would
+    turn a re-run into a no-op. A caller-owned path is used as is, so
+    a second drain over it resumes where the first stopped.
+
+    ``shuffle_partitions`` sizes the state-store TASK COUNT to the
+    (tiny) state volume for the duration of the drain and is restored
+    afterwards (the per-microbatch cost of these bounded replays is
+    state tasks, not data). The count is pinned at the checkpoint's
+    batch 0, and results are partition-count invariant. ``None`` leaves
+    the session's setting alone.
     """
-    # HLA_STREAM_STATE_PARTITIONS lets the bench size state tasks to
-    # its replay without touching query code; parity tests keep the
-    # default (results are partition-count invariant — hash-parity is
-    # the oracle on every streaming query).
-    if state_partitions is None:
-        state_partitions = int(
-            os.environ.get("HLA_STREAM_STATE_PARTITIONS", "8")
-        )
-    timeout_sec = _drain_timeout(timeout_sec)
     spark = sdf.sparkSession
-    # Session-unique checkpoint (r6: a concurrent pytest + sweep pair
-    # raced rmtree against an in-flight batch-0 state write and died
-    # with STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY — same fix class
-    # as q_schema_evolution_read's derived dir).
-    app = spark.sparkContext.applicationId
-    ckpt = ckpt_path(name, app)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    if checkpoint is None:
+        checkpoint = ckpt_path(name, spark.sparkContext.applicationId)
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    writer = sdf.writeStream.queryName(name).outputMode(output_mode)
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch)
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    if shuffle_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
+            writer.option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(timeout_sec):
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            last = q.lastProgress
             q.stop()
             raise RuntimeError(
-                f"stream {name!r} did not drain within {timeout_sec}s"
+                f"stream {name!r} did not drain within {DRAIN_TIMEOUT_S}s; "
+                f"last batch {last['batchId'] if last else None}"
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
-
-
-def run_foreach_batch_to_parquet(
-    sdf: DataFrame, name: str, out_dir: str, timeout_sec: int = 300
-) -> None:
-    """T7: drain via foreachBatch -> partitioned parquet sink.
-
-    foreachBatch is the production fan-out sink: each microbatch is a
-    batch DataFrame the callback writes with the full batch writer
-    (partitioning, dynamic overwrite, multiple sinks). Delivery is
-    AT-LEAST-once — a mid-batch failure replays the batch — so the
-    sink keys each batch's files on batch_id and overwrites, making
-    replays idempotent (effectively-once end to end).
-    """
-    timeout_sec = _drain_timeout(timeout_sec)
-    spark = sdf.sparkSession
-    app = spark.sparkContext.applicationId
-    ckpt = ckpt_path(name, app)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").partitionBy("event_type").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    # same state-partition sizing rationale as run_to_table
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise RuntimeError(
-                f"stream {name!r} did not drain within {timeout_sec}s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return spark.table(name) if foreach_batch is None else None

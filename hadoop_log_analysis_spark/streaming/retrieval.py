@@ -46,11 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hadoop_log_analysis_spark.streaming.events_stream import (
-    TMP,
-    _drain_timeout,
-    _tag,
-    ckpt_path,
-    stamp_replay_order,
+    cached_drop,
+    run_drain,
 )
 
 # Same synthetic arrival clock convention as docs_dedup.
@@ -69,7 +66,7 @@ def derive_query_drop_dir(
     spark: SparkSession, sf_dir: str, every: int = 25, n_files: int = 4
 ) -> str:
     """Write every ``every``-th embedding row as an arrival-ordered
-    JSON query feed (q_id, ts_us, qvec).
+    JSON query feed (q_id, ts_us, qvec) of ``n_files`` files.
 
     Vectors cross the JSON boundary exactly: float32 -> double is
     value-preserving, Jackson emits the shortest round-trip decimal,
@@ -77,32 +74,26 @@ def derive_query_drop_dir(
     equals the batch ``CAST(embedding AS DOUBLE)`` element for
     element, which is what lets the DuckDB oracle stay exact.
     """
-    path = os.path.join(TMP, f"emb_query_drop_{every}_{n_files}f_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_READY")
-    if os.path.exists(marker):
-        return path
-    shutil.rmtree(path, ignore_errors=True)
-
     from hadoop_log_analysis_spark.sources.catalog import scan
 
-    queries = (
-        scan(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % every == 0)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            (F.lit(QUERY_BASE_US) + F.col("vec_id") * 1_000_000).alias("ts_us"),
-            F.col("embedding").cast("array<double>").alias("qvec"),
+    def build(path: str) -> None:
+        queries = (
+            scan(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") % every == 0)
+            .select(
+                F.col("vec_id").alias("q_id"),
+                (F.lit(QUERY_BASE_US) + F.col("vec_id") * 1_000_000).alias("ts_us"),
+                F.col("embedding").cast("array<double>").alias("qvec"),
+            )
         )
-    )
-    (
-        queries.repartitionByRange(n_files, "ts_us")
-        .sortWithinPartitions("ts_us")
-        .write.mode("overwrite")
-        .json(path)
-    )
-    stamp_replay_order(path)
-    open(marker, "w").close()
-    return path
+        (
+            queries.repartitionByRange(n_files, "ts_us")
+            .sortWithinPartitions("ts_us")
+            .write.mode("overwrite")
+            .json(path)
+        )
+
+    return cached_drop(f"emb_query_drop_{every}_{n_files}f", sf_dir, build)
 
 
 def read_query_stream(
@@ -116,25 +107,26 @@ def read_query_stream(
     )
 
 
-def run_stream_knn(
+def stream_knn(
     queries_stream: DataFrame,
     corpus: DataFrame,
     k: int,
     name: str,
     out_dir: str,
-    timeout_sec: int = 300,
     ranker: Callable[[DataFrame], DataFrame] | None = None,
+    shuffle_partitions: int = 8,
 ) -> DataFrame:
     """Drain a query stream through per-batch top-k retrieval.
 
-    foreachBatch skeleton per events_stream.run_foreach_batch_to_parquet
-    (same checkpoint / availableNow / idempotent batch_id-overwrite
-    discipline); each microbatch of queries goes through ``ranker`` —
-    any batch function (q_id, qvec) -> (q_id, vec_id, sim, rn) — and
-    only the k rows per query are written. The default ranker is the
-    exact broadcast-corpus scan (operators.similarity.exact_topk_multi);
-    pass an ``ivf_topk_multi`` closure for the corpus-past-broadcast
-    route. Returns the read-back result for the whole drained feed.
+    A foreachBatch drain (events_stream.run_drain, idempotent
+    batch_id-keyed overwrite); each microbatch of queries goes through
+    ``ranker`` — any batch function (q_id, qvec) -> (q_id, vec_id,
+    sim, rn) — and only the k rows per query are written. The default
+    ranker is the exact broadcast-corpus scan
+    (operators.similarity.exact_topk_multi); pass an
+    ``ivf_topk_multi`` closure for the corpus-past-broadcast route.
+    ``shuffle_partitions`` applies for the drain, as in run_drain.
+    Returns the read-back result for the whole drained feed.
     """
     from hadoop_log_analysis_spark.operators.similarity import (
         exact_topk_multi,
@@ -142,11 +134,6 @@ def run_stream_knn(
 
     if ranker is None:
         ranker = lambda batch_df: exact_topk_multi(batch_df, corpus, k=k)  # noqa: E731
-    timeout_sec = _drain_timeout(timeout_sec)
-    spark = queries_stream.sparkSession
-    app = spark.sparkContext.applicationId
-    ckpt = ckpt_path(name, app)
-    shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -158,24 +145,10 @@ def run_stream_knn(
             .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
         )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            queries_stream.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise RuntimeError(
-                f"stream {name!r} did not drain within {timeout_sec}s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
+    run_drain(
+        queries_stream, name, foreach_batch=write_batch,
+        shuffle_partitions=shuffle_partitions,
+    )
     sink_schema = T.StructType(
         [
             T.StructField("q_id", T.LongType()),
@@ -185,4 +158,6 @@ def run_stream_knn(
             T.StructField("batch_id", T.LongType()),
         ]
     )
-    return spark.read.schema(sink_schema).parquet(out_dir).drop("batch_id")
+    return queries_stream.sparkSession.read.schema(sink_schema).parquet(
+        out_dir
+    ).drop("batch_id")

@@ -65,29 +65,8 @@ the state-spread effect is measured by scripts/stream_state_skew.py
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def bucket_seconds_env(default_sec: int) -> int:
-    """HLA_STREAM_BUCKET_SECONDS overrides the registered bucketed
-    queries' bucket width so the probes can sweep the knob without
-    code edits (the HLA_STREAM_JOIN_* pattern). Output is
-    width-invariant (tests/test_properties.py sweeps it; the oracles
-    hash-enforce it), so overriding never changes answers — only the
-    state-spread/duplication trade. Validated like the drain timeout:
-    nonsense fails loudly."""
-    env = os.environ.get("HLA_STREAM_BUCKET_SECONDS")
-    if env is None:
-        return default_sec
-    val = int(env)
-    if val < 1:
-        raise ValueError(
-            f"HLA_STREAM_BUCKET_SECONDS must be >= 1, got {env}"
-        )
-    return val
 
 
 def bucketed_interval_join(

@@ -33,16 +33,6 @@ def main() -> None:
         print("usage: isolate_bench.py <query> [<query> ...]")
         raise SystemExit(2)
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # mirror bench.py's streaming replay envs (r12: an isolation run of
-    # q_stream_stream_left_join without these measured the DEFAULT
-    # 8-file/mFPT=1 replay — ~11 microbatches, 11.4 s — against the
-    # bench's 2-file/mFPT=3 row, a 4x apples-to-oranges artifact)
-    os.environ.setdefault("HLA_STREAM_JOIN_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_JOIN_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_PSI_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_DEDUP_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_DEDUP_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_STATE_PARTITIONS", "2")
     print(f"load_avg at start: {[round(x, 2) for x in os.getloadavg()]}")
     reg = load_registry()
     spark = get_spark(app_name="isolate-bench")

@@ -63,9 +63,10 @@ def main() -> int:
         read_docs_stream,
         stream_minhash_dup_hits,
     )
+    from hadoop_log_analysis_spark.streaming import events_stream
     from hadoop_log_analysis_spark.streaming.events_stream import (
         ckpt_path,
-        run_to_table,
+        run_drain,
         stamp_replay_order,
     )
     from scripts.stream_state_skew import state_profile
@@ -81,6 +82,8 @@ def main() -> int:
             "RocksDBStateStoreProvider",
         )
     app = spark.sparkContext.applicationId
+    # allow 600 s per drain, double the default
+    events_stream.DRAIN_TIMEOUT_S = 600
     tag = os.path.basename(os.path.normpath(args.sf_dir))
 
     docs = scan(spark, args.sf_dir, "documents")
@@ -122,7 +125,7 @@ def main() -> int:
 
         table = f"dedup_state_{fname}"
         hits = stream_minhash_dup_hits(read_docs_stream(spark, drop, 2))
-        out = run_to_table(hits, table, "append", timeout_sec=600)
+        out = run_drain(hits, table, "append")
         n_hits = out.count()
         n_suppressed = out.select("doc_id").distinct().count()
         ckpt = ckpt_path(table, app)

@@ -78,8 +78,11 @@ def main() -> int:
     ap.add_argument("--out", default=os.path.join(TMP, "stream_state_skew.json"))
     ap.add_argument("--variants", nargs="*", default=["plain", "bucketed"],
                     help="which join variants to drain (plain bucketed); "
-                         "width-curve runs set HLA_STREAM_BUCKET_SECONDS "
-                         "and pass --variants bucketed")
+                         "width-curve runs pass --bucket-seconds and "
+                         "--variants bucketed")
+    ap.add_argument("--bucket-seconds", type=int, default=None,
+                    help="bucket width W for the bucketed variants "
+                         "(default: the registered T8_BUCKET_SECONDS)")
     ap.add_argument("--provider", choices=["hdfs", "rocksdb"], default="hdfs",
                     help="state store provider: hdfs = Spark's default "
                          "HDFSBackedStateStoreProvider (in-memory map + "
@@ -91,13 +94,7 @@ def main() -> int:
                          "per-partition byte walk measures the spread")
     args = ap.parse_args()
 
-    # bench replay granularity (2 files / mFPT=3) keeps the drain fast;
-    # state residency is data-shaped, not batch-shaped, and the final
-    # checkpoint state is identical either way (parity law)
-    os.environ.setdefault("HLA_STREAM_JOIN_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_JOIN_MFPT", "3")
-
-    from hadoop_log_analysis_spark.queries import load_registry
+    from hadoop_log_analysis_spark.queries import load_registry, streaming_q
     from hadoop_log_analysis_spark.queries.streaming_q import (
         T8_LEFT_BKT_TABLE,
         T8_LEFT_TABLE,
@@ -119,6 +116,8 @@ def main() -> int:
         )
     app = spark.sparkContext.applicationId
     reg = load_registry()
+    if args.bucket_seconds is not None:
+        streaming_q.T8_BUCKET_SECONDS = args.bucket_seconds
     # plain join vs the r13 bucketed skew defense, side by side: the
     # defense's whole claim is the max/med drop at identical output
     variants = {
@@ -149,7 +148,7 @@ def main() -> int:
             # drifted — fail loudly, never record a hollow measurement
             assert prof, (
                 f"no state found under {ckpt}; checkpoint naming "
-                f"desynced from run_to_table"
+                f"desynced from run_drain"
             )
             rows = {}
             for op, parts in prof.items():
@@ -165,15 +164,7 @@ def main() -> int:
             row = {"rows_out": n, "state": rows, "provider": args.provider}
             if vname.startswith("bucketed"):
                 # self-describing artifact: which width produced this
-                # (default = the registered knee, not a re-hardcode)
-                from hadoop_log_analysis_spark.queries.streaming_q import (
-                    T8_BUCKET_SECONDS,
-                )
-                row["bucket_seconds"] = int(
-                    os.environ.get(
-                        "HLA_STREAM_BUCKET_SECONDS", str(T8_BUCKET_SECONDS)
-                    )
-                )
+                row["bucket_seconds"] = streaming_q.T8_BUCKET_SECONDS
             result[label][vname] = row
             print(f"{label}/{vname}: rows={n} " + json.dumps(rows), flush=True)
             # fresh checkpoint per dir: the drain keys the ckpt on the

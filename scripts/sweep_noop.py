@@ -9,9 +9,8 @@ Usage:
 
 Resumable: queries already present in out.jsonl are skipped, so an
 interrupted sweep continues where it stopped. Honors
-SPARK_GRAFT_SF_DIR (default sf0.1). Mirrors bench.py's streaming
-replay envs so streaming rows measure the bench configuration, not
-the finer-grained parity-test replay.
+SPARK_GRAFT_SF_DIR (default sf0.1). Streaming rows run at the shipped
+replay cadences (streaming_q.REPLAY).
 """
 
 import json
@@ -29,24 +28,6 @@ def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else ".tmp/sweep_noop.jsonl"
     only = set(sys.argv[2:])
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # bench.py's streaming replay configuration (see bench.py main()).
-    os.environ.setdefault("HLA_STREAM_JOIN_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_JOIN_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_PSI_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_STATE_PARTITIONS", "2")
-    os.environ.setdefault("HLA_STREAM_DEDUP_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_DEDUP_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_KNN_MFPT", "4")
-    os.environ.setdefault("HLA_STREAM_SEQ_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_SEQ_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_COUNTS_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_COUNTS_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_T5_DEDUP_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_T5_DEDUP_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_COMPLETE_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_COMPLETE_MFPT", "3")
-    os.environ.setdefault("HLA_STREAM_HH_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_HH_MFPT", "3")
     done: dict[str, float] = {}
     if os.path.exists(out_path):
         with open(out_path) as f:

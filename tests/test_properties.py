@@ -2301,17 +2301,17 @@ def test_decimal_tier_queries_partition_invariant(spark):
 
 
 def test_bfs_checkpoint_cadence_invariant(spark, monkeypatch):
-    """HLA_BFS_CHECKPOINT_EVERY_K (VERDICT r9 "What's wrong" #4): the
-    deep-graph checkpoint cadence — re-checkpoint the distance table
-    every k levels, union-of-blocks between — must be output-invariant.
-    k=2 rows must be IDENTICAL to the default k=1 per-level rewrite."""
-    from hadoop_log_analysis_spark.queries import load_registry
+    """graph_q.BFS_CHECKPOINT_EVERY_K: the deep-graph checkpoint
+    cadence — re-checkpoint the distance table every k levels,
+    union-of-blocks between — must be output-invariant. k=2 rows must
+    be IDENTICAL to the shipped k=1 per-level rewrite."""
+    from hadoop_log_analysis_spark.queries import graph_q, load_registry
     from tests.conftest import SF0001
 
     fn = load_registry()["q_bfs_hops"].fn
-    monkeypatch.delenv("HLA_BFS_CHECKPOINT_EVERY_K", raising=False)
+    assert graph_q.BFS_CHECKPOINT_EVERY_K == 1
     base = [tuple(r) for r in fn(spark, SF0001).collect()]
-    monkeypatch.setenv("HLA_BFS_CHECKPOINT_EVERY_K", "2")
+    monkeypatch.setattr(graph_q, "BFS_CHECKPOINT_EVERY_K", 2)
     k2 = [tuple(r) for r in fn(spark, SF0001).collect()]
     assert base and base == k2
 
@@ -2643,8 +2643,7 @@ def test_merge_bucketed_left_collapses_duplicate_nulls(spark):
 
 
 def test_bucketed_interval_join_validates_widths():
-    """Degenerate interval/bucket widths fail loudly (the
-    HLA_BFS_CHECKPOINT_EVERY_K validation discipline): width 0 would
+    """Degenerate interval/bucket widths fail loudly: width 0 would
     make `div` return NULL and silently empty the join."""
     import pytest as _pytest
 
@@ -2839,49 +2838,6 @@ def test_merge_bucketed_left_validates_payload_cols():
         merge_bucketed_left(
             _FakeDF(), "click_id", "purchase_id", payload_cols=("nope",)
         )
-
-
-def test_stream_drain_timeout_env_validated(monkeypatch):
-    """HLA_STREAM_DRAIN_TIMEOUT_SEC (r12): the drain deadline is a
-    harness bound, overridable for slow hosts — the override must be
-    applied when sane and REFUSED loudly when nonsensical (the
-    HLA_BFS_CHECKPOINT_EVERY_K validation discipline)."""
-    import pytest as _pytest
-
-    from hadoop_log_analysis_spark.streaming.events_stream import (
-        _drain_timeout,
-    )
-
-    monkeypatch.delenv("HLA_STREAM_DRAIN_TIMEOUT_SEC", raising=False)
-    assert _drain_timeout(300) == 300
-    monkeypatch.setenv("HLA_STREAM_DRAIN_TIMEOUT_SEC", "900")
-    assert _drain_timeout(300) == 900
-    for bad in ("0", "-5"):
-        monkeypatch.setenv("HLA_STREAM_DRAIN_TIMEOUT_SEC", bad)
-        with _pytest.raises(ValueError):
-            _drain_timeout(300)
-    monkeypatch.setenv("HLA_STREAM_DRAIN_TIMEOUT_SEC", "abc")
-    with _pytest.raises(ValueError):
-        _drain_timeout(300)
-
-
-def test_stream_bucket_seconds_env_validated(monkeypatch):
-    """HLA_STREAM_BUCKET_SECONDS (r13): the probes' width-sweep knob
-    for the bucketed joins — applied when sane, refused loudly when
-    nonsensical (width 0 would NULL every bucket and silently empty
-    the join)."""
-    import pytest as _pytest
-
-    from hadoop_log_analysis_spark.streaming.skew import bucket_seconds_env
-
-    monkeypatch.delenv("HLA_STREAM_BUCKET_SECONDS", raising=False)
-    assert bucket_seconds_env(3600) == 3600
-    monkeypatch.setenv("HLA_STREAM_BUCKET_SECONDS", "900")
-    assert bucket_seconds_env(3600) == 900
-    for bad in ("0", "-5", "abc"):
-        monkeypatch.setenv("HLA_STREAM_BUCKET_SECONDS", bad)
-        with _pytest.raises(ValueError):
-            bucket_seconds_env(3600)
 
 
 def test_parse_app_log_split_extraction_matches_regex_groups(spark):

@@ -7,10 +7,51 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_log_analysis_spark.queries import load_registry
+from hadoop_log_analysis_spark.queries.streaming_q import REPLAY, Replay
 from hadoop_log_analysis_spark.sources.catalog import scan
 from tests.conftest import SF001, SF0001
 
 REGISTRY = load_registry()
+
+# The measurement-style fold: 2 drop files, 3 per microbatch.
+FOLDED = Replay(2, 3)
+
+
+def _oracle_parity_at(spark, monkeypatch, qname, family, replays):
+    """Run ``qname`` with REPLAY[family] set to each of ``replays`` and
+    compare against its DuckDB oracle with the driver's comparator."""
+    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
+
+    spec = REGISTRY[qname]
+    want = run_oracle(spec.oracle, SF001)
+    for replay in replays:
+        monkeypatch.setitem(REPLAY, family, replay)
+        got = spec.fn(spark, SF001).toPandas()
+        problems = compare_frames(got, want)
+        assert not problems, f"{qname} at {replay} desynced: {problems}"
+
+
+def test_replay_table_ships_default_cadences():
+    """The shipped cadences: files / mFPT / state partitions per query
+    family, plus the plain constants that replaced env overrides."""
+    from hadoop_log_analysis_spark.queries import graph_q, streaming_q
+    from hadoop_log_analysis_spark.streaming import events_stream
+
+    assert REPLAY == {
+        "complete": Replay(8, 2, 8),
+        "dedup": Replay(8, 1, 8),
+        "stateful": Replay(8, 1, 32),
+        "inner_join": Replay(8, 2, 8),
+        "left_join": Replay(8, 1, 8),
+        "heavy_hitters": Replay(8, 1, 8),
+        "psi_monitor": Replay(8, 2, 8),
+        "minhash_dedup": Replay(8, 1, 16),
+        "knn": Replay(4, 1, 8),
+    }
+    assert streaming_q.MINHASH_GROUPS_PER_BAND == 128
+    assert streaming_q.T8_BUCKET_SECONDS == 4 * 3600
+    assert events_stream.DRAIN_TIMEOUT_S == 300
+    assert graph_q.BFS_CHECKPOINT_EVERY_K == 1
 
 
 def test_watermark_append_emits_closed_windows_matching_batch(spark):
@@ -65,7 +106,7 @@ def test_watermark_drops_late_row_exact_count(spark):
     from hadoop_log_analysis_spark.streaming.events_stream import (
         TMP,
         read_events_stream,
-        run_to_table,
+        run_drain,
     )
 
     drop = os.path.join(TMP, "stream_drop_latecase")
@@ -104,11 +145,12 @@ def test_watermark_drops_late_row_exact_count(spark):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_to_table(agg, "t4_latecase", "append")
+    out = run_drain(agg, "t4_latecase", "append")
     emitted = {(r["w"].start.isoformat(), r.n) for r in out.collect()}
     assert emitted == {("2024-01-01T00:00:00", 2)}
 
 
+import pandas as pd
 import pytest
 
 
@@ -121,27 +163,17 @@ import pytest
     ],
 )
 def test_stream_stream_left_join_parity_at_bench_mfpt(spark, monkeypatch, qname):
-    """T8 at the BENCH drain config (ADVICE r9 bench.py:151): the
-    folded drain — HLA_STREAM_JOIN_MFPT=3 over 2 drop files packs the
-    replay into two microbatches, and correctness then rests on Spark
-    scheduling a no-data flush batch after the final sentinel-carrying
-    batch. Until now that path was covered only by manual sf0.1
-    re-verification; this pins it in CI with the driver's exact
+    """T8 left-outer joins at the shipped cadence (8 files, every
+    sentinel its own microbatch) and at the folded one, where
+    2 files at mFPT=3 pack the replay into two microbatches and
+    correctness rests on Spark scheduling a no-data flush batch after
+    the final sentinel-carrying batch. Pinned with the driver's exact
     comparator, so a Spark-version change in no-data-batch triggering
-    desyncs the benched path LOUDLY instead of silently. r13: also
-    pins the bucketed skew-defense twin — its exploded sentinels and
-    drained merge must survive the folded replay identically. r14:
-    and the payload-carrying merge variant (first()-per-id recovery
-    under the folded replay)."""
-    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
-
-    monkeypatch.setenv("HLA_STREAM_JOIN_DROP_FILES", "2")
-    monkeypatch.setenv("HLA_STREAM_JOIN_MFPT", "3")
-    spec = REGISTRY[qname]
-    got = spec.fn(spark, SF001).toPandas()
-    want = run_oracle(spec.oracle, SF001)
-    problems = compare_frames(got, want)
-    assert not problems, f"bench-config drain desynced from oracle: {problems}"
+    fails loudly; covers the bucketed skew-defense twin (exploded
+    sentinels, drained merge) and its payload-carrying variant."""
+    _oracle_parity_at(
+        spark, monkeypatch, qname, "left_join", [REPLAY["left_join"], FOLDED]
+    )
 
 
 def test_stream_minhash_dedup_matches_greedy_simulation(spark):
@@ -156,12 +188,15 @@ def test_stream_minhash_dedup_matches_greedy_simulation(spark):
         band_hash_expr,
         minhash_signature,
     )
+    from hadoop_log_analysis_spark.queries.streaming_q import (
+        MINHASH_GROUPS_PER_BAND,
+    )
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
         derive_docs_drop_dir,
         read_docs_stream,
         stream_minhash_dup_hits,
     )
-    from hadoop_log_analysis_spark.streaming.events_stream import run_to_table
+    from hadoop_log_analysis_spark.streaming.events_stream import run_drain
 
     docs = scan(spark, SF0001, "documents").select("doc_id", "text")
     sig_rows = (
@@ -184,24 +219,34 @@ def test_stream_minhash_dedup_matches_greedy_simulation(spark):
                 seen[(bi, bh)] = r.doc_id
     assert expected, "fixture should contain near-duplicates"
 
-    # five replay configs: the default 8-file dir at two microbatch
-    # widths, the folded 2-file/mFPT=3 BENCH drain config (the
-    # HLA_STREAM_DEDUP_* knobs' timing regime), plus the r15
-    # coarse-grouped path (groups_per_band) at the registered default
-    # AND a deliberately tiny/odd G under the finest cadence (many
-    # buckets per group x incremental state across 8 batches) — all
-    # must produce the identical greedy hit multiset
+    # replay configs: the per-bucket path on the 8-file dir at two
+    # microbatch widths; the coarse-grouped path at the shipped
+    # q_stream_minhash_dedup config (8 files, mFPT=1, G=128, 16 state
+    # partitions) and at the folded 2-file / mFPT=3 one; and a
+    # deliberately tiny/odd G under the finest cadence (many buckets
+    # per group x incremental state across 8 batches) — all must
+    # produce the identical greedy hit multiset
+    shipped = REPLAY["minhash_dedup"]
+    g = MINHASH_GROUPS_PER_BAND
     configs = [
-        (derive_docs_drop_dir(spark, SF0001), 1, None),
-        (derive_docs_drop_dir(spark, SF0001), 4, None),
-        (derive_docs_drop_dir(spark, SF0001, n_files=2), 3, 128),
-        (derive_docs_drop_dir(spark, SF0001), 1, 7),
+        (derive_docs_drop_dir(spark, SF0001), 1, None, 8),
+        (derive_docs_drop_dir(spark, SF0001), 4, None, 8),
+        (
+            derive_docs_drop_dir(spark, SF0001, n_files=shipped.files),
+            shipped.mfpt,
+            g,
+            shipped.state_partitions,
+        ),
+        (derive_docs_drop_dir(spark, SF0001, n_files=2), 3, g, 8),
+        (derive_docs_drop_dir(spark, SF0001), 1, 7, 8),
     ]
-    for i, (drop, mfpt, groups) in enumerate(configs):
+    for i, (drop, mfpt, groups, parts) in enumerate(configs):
         hits = stream_minhash_dup_hits(
             read_docs_stream(spark, drop, mfpt), groups_per_band=groups
         )
-        out = run_to_table(hits, f"test_mh_dedup_{i}", "append")
+        out = run_drain(
+            hits, f"test_mh_dedup_{i}", "append", shuffle_partitions=parts
+        )
         got = Counter(
             (r.doc_id, r.band_idx, r.winner_id) for r in out.collect()
         )
@@ -218,7 +263,7 @@ def test_stream_knn_batch_boundary_invariant(spark):
     from hadoop_log_analysis_spark.streaming.retrieval import (
         derive_query_drop_dir,
         read_query_stream,
-        run_stream_knn,
+        stream_knn,
     )
     import os
 
@@ -229,7 +274,7 @@ def test_stream_knn_batch_boundary_invariant(spark):
     results = {}
     for mfpt in (1, 4):
         out_dir = os.path.join(TMP, f"test_knn_{mfpt}")
-        df = run_stream_knn(
+        df = stream_knn(
             read_query_stream(spark, drop, mfpt),
             corpus,
             k=10,
@@ -261,7 +306,7 @@ def test_stream_knn_ivf_matches_batch_ranker(spark):
         QUERY_BASE_US,
         derive_query_drop_dir,
         read_query_stream,
-        run_stream_knn,
+        stream_knn,
     )
     import os
 
@@ -286,7 +331,7 @@ def test_stream_knn_ivf_matches_batch_ranker(spark):
     drop = derive_query_drop_dir(spark, SF0001)
     streamed = {
         tuple(r)
-        for r in run_stream_knn(
+        for r in stream_knn(
             read_query_stream(spark, drop, 2),
             corpus,
             k=10,
@@ -324,7 +369,7 @@ def test_stream_minhash_dedup_ttl_horizon(spark):
     )
     from hadoop_log_analysis_spark.streaming.events_stream import (
         TMP,
-        run_to_table,
+        run_drain,
         stamp_replay_order,
     )
 
@@ -374,7 +419,7 @@ def test_stream_minhash_dedup_ttl_horizon(spark):
     hits = stream_minhash_dup_hits(
         read_docs_stream(spark, drop, 1), horizon_us=horizon
     )
-    out = run_to_table(hits, "test_mh_ttl", "append")
+    out = run_drain(hits, "test_mh_ttl", "append")
     got = sorted((r.doc_id, r.band_idx, r.winner_id) for r in out.collect())
     # F and H emit NOTHING: watermark filtering drops late input before
     # applyInPandasWithState (observed and pinned here — Spark filters
@@ -410,58 +455,29 @@ def test_stream_minhash_dedup_ttl_horizon(spark):
 
 
 @pytest.mark.parametrize(
-    "qname, env_prefix",
-    [
-        ("q_stream_stateful_counts", "HLA_STREAM_COUNTS"),
-        ("q_stream_sequence_match", "HLA_STREAM_SEQ"),
-    ],
+    "qname", ["q_stream_stateful_counts", "q_stream_sequence_match"]
 )
-def test_stateful_pair_parity_at_folded_replay(spark, monkeypatch, qname,
-                                               env_prefix):
-    """r14 optimization pin: the two applyInPandasWithState drains got
-    the q_stream_minhash_dedup treatment (per-query state-partition
-    sizing + replay-fold knobs — their cost is per-group Python calls
-    x batch count). The drained answer is a per-user max of monotone
-    running values, so it must be batching-invariant; this pins the
-    FOLDED replay (2 files, mFPT=3 — one microbatch, the measurement
-    config) against the DuckDB oracle with the driver's exact
-    comparator, so a regression in the in-batch (ts, event_id) sort or
-    the monotonicity argument desyncs loudly. Also pins the loud
-    validation of the new knobs."""
-    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
-
-    monkeypatch.setenv(f"{env_prefix}_DROP_FILES", "2")
-    monkeypatch.setenv(f"{env_prefix}_MFPT", "3")
-    monkeypatch.setenv(f"{env_prefix}_STATE_PARTITIONS", "4")
-    spec = REGISTRY[qname]
-    got = spec.fn(spark, SF001).toPandas()
-    want = run_oracle(spec.oracle, SF001)
-    problems = compare_frames(got, want)
-    assert not problems, f"folded stateful drain desynced: {problems}"
-    monkeypatch.setenv(f"{env_prefix}_STATE_PARTITIONS", "0")
-    with pytest.raises(ValueError):
-        spec.fn(spark, SF001)
+def test_stateful_pair_parity_at_folded_replay(spark, monkeypatch, qname):
+    """The two per-user applyInPandasWithState drains. The drained
+    answer is a per-user max of monotone running values, so it must
+    be batching- and partition-count-invariant: pinned at the shipped
+    cadence (8 files, mFPT=1, 32 state partitions) and folded into one
+    microbatch over 4 partitions, so a regression in the in-batch
+    (ts, event_id) sort or the monotonicity argument fails loudly."""
+    _oracle_parity_at(
+        spark, monkeypatch, qname, "stateful",
+        [REPLAY["stateful"], Replay(2, 3, 4)],
+    )
 
 
 def test_stream_dedup_parity_at_folded_replay(spark, monkeypatch):
-    """r14 optimization pin: q_stream_dedup's replay-fold knobs. Every
+    """q_stream_dedup at the shipped and folded cadences. Every
     injected duplicate shares its original's event time and file
     slice, so folding only narrows the watermark movement between
-    original and dup — the drained set must stay the unique rows.
-    Pins the folded cadence against the DuckDB oracle with the
-    driver's comparator, plus the loud knob validation."""
-    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
-
-    monkeypatch.setenv("HLA_STREAM_T5_DEDUP_DROP_FILES", "2")
-    monkeypatch.setenv("HLA_STREAM_T5_DEDUP_MFPT", "3")
-    spec = REGISTRY["q_stream_dedup"]
-    got = spec.fn(spark, SF001).toPandas()
-    want = run_oracle(spec.oracle, SF001)
-    problems = compare_frames(got, want)
-    assert not problems, f"folded dedup drain desynced: {problems}"
-    monkeypatch.setenv("HLA_STREAM_T5_DEDUP_MFPT", "0")
-    with pytest.raises(ValueError):
-        spec.fn(spark, SF001)
+    original and dup — the drained set must stay the unique rows."""
+    _oracle_parity_at(
+        spark, monkeypatch, "q_stream_dedup", "dedup", [REPLAY["dedup"], FOLDED]
+    )
 
 
 @pytest.mark.parametrize(
@@ -474,42 +490,119 @@ def test_stream_dedup_parity_at_folded_replay(spark, monkeypatch):
     ],
 )
 def test_complete_mode_parity_at_folded_replay(spark, monkeypatch, qname):
-    """r14 optimization pin: the complete-mode, no-watermark drains
-    share HLA_STREAM_COMPLETE_{DROP_FILES,MFPT} (the r8 PSI law —
-    complete mode re-emits the full aggregate and holds no watermark,
-    so the drained result is a pure function of the total replayed
-    data). Pins the folded cadence against the DuckDB oracle with the
-    driver's comparator, plus the loud knob validation."""
-    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
-
-    monkeypatch.setenv("HLA_STREAM_COMPLETE_DROP_FILES", "2")
-    monkeypatch.setenv("HLA_STREAM_COMPLETE_MFPT", "3")
-    spec = REGISTRY[qname]
-    got = spec.fn(spark, SF001).toPandas()
-    want = run_oracle(spec.oracle, SF001)
-    problems = compare_frames(got, want)
-    assert not problems, f"folded complete-mode drain desynced: {problems}"
-    monkeypatch.setenv("HLA_STREAM_COMPLETE_MFPT", "-1")
-    with pytest.raises(ValueError):
-        spec.fn(spark, SF001)
+    """The complete-mode, no-watermark drains re-emit the full
+    aggregate each batch, so the drained result is a pure function of
+    the total replayed data: pinned at the shipped 8-file / mFPT=2
+    cadence and at the folded one."""
+    _oracle_parity_at(
+        spark, monkeypatch, qname, "complete", [REPLAY["complete"], FOLDED]
+    )
 
 
 def test_stream_heavy_hitters_parity_at_folded_replay(spark, monkeypatch):
-    """r14 optimization pin: q_stream_heavy_hitters' fold knobs.
+    """q_stream_heavy_hitters at the shipped and folded cadences.
     Misra-Gries emissions are cadence-dependent, but the exact recount
     thresholded at n/(k+1) filters extra candidates and the MG
     guarantee puts every true heavy hitter in any cadence's final
-    state — so the drained ANSWER must be cadence-invariant. Pins the
-    folded cadence against the oracle + the loud knob validation."""
-    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
+    state — so the drained ANSWER must be cadence-invariant."""
+    _oracle_parity_at(
+        spark, monkeypatch, "q_stream_heavy_hitters", "heavy_hitters",
+        [REPLAY["heavy_hitters"], FOLDED],
+    )
 
-    monkeypatch.setenv("HLA_STREAM_HH_DROP_FILES", "2")
-    monkeypatch.setenv("HLA_STREAM_HH_MFPT", "3")
-    spec = REGISTRY["q_stream_heavy_hitters"]
-    got = spec.fn(spark, SF001).toPandas()
-    want = run_oracle(spec.oracle, SF001)
+
+def test_flattened_drop_mtimes_keep_answers(spark):
+    """A cached drop dir keeps its replay order only in part-file
+    mtimes, which a copy (``cp -r``, an archive) flattens. Flatten the
+    cached events (with dups, with sentinels) and docs drop dirs at
+    sf0.01, then check the answers that depend on replay order."""
+    import os
+
+    from hadoop_log_analysis_spark.operators.dedup import (
+        band_hash_expr,
+        minhash_signature,
+    )
+    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
+    from hadoop_log_analysis_spark.streaming.docs_dedup import (
+        derive_docs_drop_dir,
+    )
+    from hadoop_log_analysis_spark.streaming.events_stream import (
+        derive_drop_dir,
+    )
+
+    drops = [
+        derive_drop_dir(spark, SF001, with_dups=True),
+        derive_drop_dir(spark, SF001, with_sentinel=True),
+        derive_docs_drop_dir(spark, SF001),
+    ]
+    for drop in drops:
+        t = os.path.getmtime(drop)
+        for f in os.listdir(drop):
+            if f.startswith("part-"):
+                os.utime(os.path.join(drop, f), (t, t))
+
+    for qname in ("q_stream_dedup", "q_stream_stream_left_join"):
+        spec = REGISTRY[qname]
+        got = spec.fn(spark, SF001).toPandas()
+        problems = compare_frames(got, run_oracle(spec.oracle, SF001))
+        assert not problems, f"{qname} after flattened mtimes: {problems}"
+
+    # q_stream_minhash_dedup against the greedy first-seen simulation
+    sig_rows = (
+        scan(spark, SF001, "documents")
+        .withColumn("sig", minhash_signature("text"))
+        .select("doc_id", band_hash_expr("sig").alias("bands"))
+        .collect()
+    )
+    seen: dict = {}
+    bands_hit: dict = {}
+    winners: dict = {}
+    for r in sorted(sig_rows, key=lambda r: r.doc_id):
+        for bi, bh in enumerate(r.bands):
+            if (bi, bh) in seen:
+                bands_hit.setdefault(r.doc_id, set()).add(bi)
+                winners[r.doc_id] = min(
+                    winners.get(r.doc_id, seen[(bi, bh)]), seen[(bi, bh)]
+                )
+            else:
+                seen[(bi, bh)] = r.doc_id
+    want = pd.DataFrame(
+        {
+            "doc_id": list(bands_hit),
+            "n_bands_hit": [len(b) for b in bands_hit.values()],
+            "min_winner_id": [winners[d] for d in bands_hit],
+        }
+    )
+    got = REGISTRY["q_stream_minhash_dedup"].fn(spark, SF001).toPandas()
+    assert len(want), "fixture should contain near-duplicates"
     problems = compare_frames(got, want)
-    assert not problems, f"folded MG drain desynced: {problems}"
-    monkeypatch.setenv("HLA_STREAM_HH_DROP_FILES", "0")
-    with pytest.raises(ValueError):
-        spec.fn(spark, SF001)
+    assert not problems, f"minhash dedup after flattened mtimes: {problems}"
+
+
+def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
+    """Two inputs that share a basename must not share a cached drop
+    dir: the second one, holding half the events, replays half."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hadoop_log_analysis_spark.streaming.events_stream import (
+        DROP_SCHEMA,
+        derive_drop_dir,
+    )
+
+    other = tmp_path / "other" / os.path.basename(SF0001)
+    other.mkdir(parents=True)
+    events = pq.read_table(os.path.join(SF0001, "events.parquet"))
+    half = events.slice(0, events.num_rows // 2)
+    pq.write_table(half, str(other / "events.parquet"))
+
+    first = derive_drop_dir(spark, SF0001)
+    second = derive_drop_dir(spark, str(other))
+    assert first != second
+    assert os.path.basename(SF0001) in os.path.basename(second)
+    for drop, src in ((first, SF0001), (second, str(other))):
+        with open(os.path.join(drop, "_READY")) as fh:
+            assert fh.read() == os.path.realpath(src)
+    n_second = spark.read.schema(DROP_SCHEMA).json(second).count()
+    assert n_second == half.num_rows < events.num_rows
