@@ -1,28 +1,30 @@
 #!/usr/bin/env python
-"""Benchmark runner — headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark runner, and the repo's one query timer (:func:`time_query`).
 
-Runs the 12 BASELINE.md headline queries (each covering a distinct
-SURVEY.md §2 operator family) plus 4 LLM-pipeline heavyweights
-(MinHash-LSH, BM25, end-to-end pretraining pipeline, dedup clusters)
-2 round-3 additions (semantic dedup, cohort retention — VERDICT r2
-item 9), and 6 round-4 additions (stream-stream left join — VERDICT
-r3 item 6 — plus bigram LM, Misra-Gries heavy hitters, pagerank,
-Bloom-prefilter semi-join, triangle counting) on
-local[$SPARK_GRAFT_CPUS], default
-/root/testdata/sf0.1, and prints ONE JSON line:
+    python bench.py                            # HEADLINE rows + ANNEX
+    python bench.py q_join5 q_pricing_summary  # only these, headline method
+
+Times the queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures)
+on local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
 
     {"metric": "...", "value": <total-sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+     "queries": {"q1": sec, ...}, "annex": {"q2": sec, ...}, "sf": 0.1}
+
+BENCH_LOCAL.json keeps every query's full :func:`time_query` record
+(spread, rerun, rows, jobs and stage sums).
 
 Timing discipline (BASELINE.md "2x of PySpark warm" criterion +
 VERDICT r2 item 2): each query is built + executed once to warm
-codegen/caches, then timed on N_RUNS (default 3) fresh executions and
-N_RUNS same-object reruns; the reported number is the MEDIAN, with
-per-query min/max spread in "queries_spread" so a noisy session is
-visible instead of silently inflating the headline. Session startup is
-excluded per BASELINE.md § "Interpretation of the 2x criterion".
-r2's uniform 1.3-1.8x inflation vs r1 was an n=1 artifact of a shared
-session under load — the median-of-3 protocol is the committed fix.
+codegen/caches, then timed on N_RUNS (default 3;
+SPARK_GRAFT_BENCH_RUNS=5 is the isolation protocol's median-of-5)
+fresh executions; the reported number is the MEDIAN, with min/max in
+the record so a noisy session is visible instead of silently inflating
+the headline. Session startup is excluded per BASELINE.md
+"Interpretation of the 2x criterion". r2's uniform 1.3-1.8x inflation
+vs r1 was an n=1 artifact of a shared session under load — the
+median-of-3 protocol is the committed fix. To split a regressed row's
+plan cost from session contention, time it alone on a quiet machine
+(`python bench.py <query>`; the load average is part of the line).
 """
 
 from __future__ import annotations
@@ -33,9 +35,14 @@ import re
 import statistics
 import sys
 import time
+from functools import partial
+
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 from hadoop_log_analysis_spark.queries import load_registry
 from hadoop_log_analysis_spark.session import get_spark
+from perfbench.tracing import StatusStore
 
 # BASELINE.md headline suite — one per operator family.
 HEADLINE = (
@@ -116,22 +123,12 @@ HEADLINE = (
 
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
-# Rotating annex (VERDICT r9 "What's missing" #3): the headline suite
-# is a FIXED 35-row series so rounds stay comparable, which left ~350
-# registry queries with no timing history at all — a heavy non-suite
-# query could regress 5x and no artifact would show it. Each bench run
-# additionally times ANNEX_WINDOW of these non-headline heavyweights,
-# chosen by a deterministic rotation keyed on how many driver bench
-# rounds exist (BENCH_r*.json count), and reports them under the
-# separate "annex" key — NEVER added to value/value_batch_only, so the
-# headline series stays comparable while the annex accumulates a
-# timing history for the heavy tail over successive rounds.
-ANNEX_ROTATION = (
-    # the pair-generating / corpus-scale heavyweights first (the ones
-    # whose silent regression would hurt most at scale)
-    "q_containment_join",
-    "q_crossdoc_ngram_coverage",
-    "q_eval_contamination",
+# Heavy-tail annex (VERDICT r9 "What's missing" #3): the headline suite
+# is a FIXED 35-row series so rounds stay comparable; these non-headline
+# heavyweights get a timing history of their own, reported under the
+# separate "annex" key and NEVER added to value/value_batch_only.
+# scripts/sweep_noop.py times the rest of the registry on demand.
+ANNEX = (
     "q_set_similarity_join",
     "q_ngram_jaccard_pairs",
     "q_pmi_collocations",
@@ -142,101 +139,79 @@ ANNEX_ROTATION = (
     "q_pca_components",
     "q_tfidf",
     "q_inverted_index_chunked",
-    "q_rake_keywords",
-    "q_logistic_irls",
-    "q_embedding_covariance",
-    "q_rouge2_eval",
-    "q_chi2_independence",
-    "q_anova_doclen",
-    "q_ks_drift",
-    "q_mahalanobis_outliers",
-    "q_spearman_corr",
-    "q_gdpr_erasure",
-    "q_stratified_sample",
-    "q_silhouette_simplified",
-    "q_cusum_shift",
-    "q_multimodal_features",
-    "q_quality_score",
-    "q_lang_quality_filter",
-    "q_gopher_rules",
-    "q_winsorized_stats",
-    "q_stats_agg",
-    "q_hhi_concentration",
-    # r11 additions, appended at the END so existing windows keep
-    # their planned rounds; these enter when the rotation wraps
-    "q_shingle_similarity_join",
-    "q_sessionize_split",
-    # r13 additions (same append-only discipline): the bucketed
-    # stream-stream skew defenses — enter when the rotation wraps
-    "q_stream_stream_left_join_bucketed",
-    "q_stream_stream_join_bucketed",
-    # r14 addition: the payload-carrying merge variant
-    "q_stream_stream_left_join_bucketed_payload",
-    # r14 additions: streaming near-dup suppression + the DISTINCT
-    # window-aggregate workaround — same append-only discipline
-    "q_stream_minhash_dedup",
-    "q_window_count_distinct",
-    "q_stream_knn",
-    "q_stream_knn_ivf",
 )
-ANNEX_WINDOW = 10
-# The driver round in which the annex landed (window 0 ran while
-# BENCH_r10 was being produced). Rounds 10-12 ran width-5 windows
-# (entries 0-14); r13 widens to 10/round (VERDICT r12 missing #3 —
-# finish the 20-entry backlog in two rounds instead of four), with
-# the start offset anchored on the 15 already-covered entries so the
-# widening SKIPS nothing.
-ANNEX_BASE_ROUND = 10
-ANNEX_WIDE_ROUND = 13  # first round at the widened window
-ANNEX_LEGACY_COVERED = 15  # entries consumed by the width-5 rounds
 
-
-def annex_window_for_round(current_round: int) -> list[str]:
-    """Pure window computation (tests/test_bench_annex.py): width-5
-    windows for the historical rounds 10-12, width-ANNEX_WINDOW from
-    ANNEX_WIDE_ROUND on, anchored at the 15 entries those historical
-    windows already covered so the widening skips nothing."""
-    if current_round < ANNEX_WIDE_ROUND:
-        start = ((current_round - ANNEX_BASE_ROUND)
-                 * 5) % len(ANNEX_ROTATION)  # historical width-5 windows
-        width = 5
-    else:
-        start = (ANNEX_LEGACY_COVERED
-                 + (current_round - ANNEX_WIDE_ROUND)
-                 * ANNEX_WINDOW) % len(ANNEX_ROTATION)
-        width = ANNEX_WINDOW
-    doubled = ANNEX_ROTATION + ANNEX_ROTATION
-    return list(doubled[start:start + width])
-
-
-def annex_names() -> list[str]:
-    """The annex queries for THIS round: a deterministic rotating
-    window over ANNEX_ROTATION keyed on the CURRENT ROUND NUMBER —
-    max round parsed from the driver's BENCH_r(\\d+).json files, plus
-    one (this run produces the next round's artifact). Keying on the
-    parsed round instead of the raw file count (ADVICE r10 #4) makes
-    the window immune to extra/missing files: an untracked re-run
-    saved under a new name or a deleted artifact shifted a count-based
-    window silently, decoupling the annex history from judged rounds."""
-    import glob
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := _re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p)))
-    ]
-    current_round = (max(rounds) if rounds else 0) + 1
-    return annex_window_for_round(current_round)
-
-# Streaming drains replay ~24 microbatches at ~1.3 s fixed overhead
-# each (~35 s per execution at sf0.1) — median-of-3 would triple the
-# suite's wall time to re-measure a number dominated by deterministic
-# per-batch fixed cost. One warm (also derives the drop dir) + one
-# timed run is a stable regression signal; spread is reported as a
-# single point so the JSON shape stays uniform.
+# A streaming row's time is dominated by deterministic per-microbatch
+# fixed cost, so median-of-3 would triple its wall time to re-measure
+# the same number: one warm (also derives the drop dir) + one timed run
+# is a stable regression signal.
 STREAMING_SINGLE_RUN = {"q_stream_stream_left_join", "q_stream_psi_monitor"}
+SINKS = ("collect", "noop")
+
+
+def _execute(df, sink: str):
+    """Run ``df`` to completion. ``collect`` fetches every row to the
+    driver. ``noop`` consumes every column on the executors and fetches
+    nothing; ``.count()`` is no substitute (ADVICE r10 #2): it lets
+    Catalyst's EliminateSorts drop the final global orderBy and prune
+    payload-only columns, so it would time a different plan."""
+    if sink == "collect":
+        return df.collect()
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, build, sink: str, runs: int = N_RUNS) -> dict:
+    """Time the DataFrame that ``build()`` returns, through ``sink``.
+
+    One warm execution (plan build, codegen, file listing; it also
+    counts the rows), then ``runs`` timed executions, each of a FRESH
+    ``build()`` so every shuffle stage runs. Under ``collect`` each
+    fresh run is followed by a timed same-object rerun, whose shuffle
+    stages are skipped (BASELINE.md's "warm" rows).
+
+    Returns one record: ``sec`` (median), ``sec_min``, ``sec_max``,
+    ``rerun_sec`` (median; None under ``noop``), ``rows``, and the first
+    timed run's ``jobs`` plus the stage sums of
+    :meth:`perfbench.tracing.StatusStore.stage_metrics` (``stages``,
+    ``tasks``, ``task_cpu_s``, ``shuffle_read_mb``, ``stage_keys``, ...).
+    The status store is read only between timed regions.
+    """
+    if sink not in SINKS or runs < 1:
+        raise ValueError(f"sink must be one of {SINKS} and runs >= 1: "
+                         f"got {sink!r}, {runs}")
+    store = StatusStore(spark)
+    warm = build()
+    if sink == "collect":
+        rows = len(_execute(warm, sink))
+    else:
+        seen = Observation()
+        _execute(warm.observe(seen, F.count(F.lit(1)).alias("n")), sink)
+        rows = seen.get["n"]
+    stages0, jobs0 = store.stage_keys(), store.job_ids()
+    fresh: list[float] = []
+    reruns: list[float] = []
+    for i in range(runs):
+        t0 = time.perf_counter()
+        df = build()
+        _execute(df, sink)
+        fresh.append(time.perf_counter() - t0)
+        if i == 0:
+            stats = store.stage_metrics(stages0)
+            stats["jobs"] = len(store.job_ids() - jobs0)
+        if sink == "collect":
+            t0 = time.perf_counter()
+            _execute(df, sink)
+            reruns.append(time.perf_counter() - t0)
+    rec = {k: round(v, 4) if isinstance(v, float) else v
+           for k, v in stats.items()}
+    rec.update(
+        sec=round(statistics.median(fresh), 4),
+        sec_min=round(min(fresh), 4),
+        sec_max=round(max(fresh), 4),
+        rerun_sec=round(statistics.median(reruns), 4) if reruns else None,
+        rows=rows,
+    )
+    return rec
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -244,11 +219,12 @@ def _sf_of(sf_dir: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def main() -> None:
-    # Streaming rows time the shipped replay cadences
-    # (streaming_q.REPLAY), the ones users get.
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_registry()
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        raise SystemExit(f"not registered: {unknown}")
     spark = get_spark(app_name="hla-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -266,112 +242,55 @@ def main() -> None:
     # 1/5/15-min load average at suite start: the contention context
     # needed to separate environment from regression after the fact.
     load_start = [round(x, 2) for x in os.getloadavg()]
-    timings: dict[str, float] = {}
-    rerun: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    base_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    for name in HEADLINE:
-        fn = registry[name].fn
-        # Streaming state-store task count = shuffle.partitions at the
-        # checkpoint's first batch; the drains' per-microbatch cost is
-        # dominated by those state tasks, not data. Size the state
-        # partitions to the state volume (tiny here), exactly as a
-        # production job would — measured at sf0.1: stream-stream join
-        # 21.9 -> 7.9 s, PSI 7.5 -> 3.8 s, identical results
-        # (hash-parity re-verified at 8). Batch queries keep the core
-        # count; checkpoints are cleared per run so the conf applies.
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            "8" if name in STREAMING_SINGLE_RUN else base_parts,
-        )
-        fn(spark, sf_dir).collect()  # warm: plan build + codegen + file listing
-        n_runs = 1 if name in STREAMING_SINGLE_RUN else N_RUNS
-        fresh: list[float] = []
-        reruns: list[float] = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.collect()  # fresh plan: full execution incl. shuffle stages
-            fresh.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            df.collect()  # same-object rerun: shuffle stages skipped —
-            reruns.append(time.perf_counter() - t0)
-            # ... this is the methodology behind BASELINE.md's "warm" rows.
-        timings[name] = round(statistics.median(fresh), 4)
-        rerun[name] = round(statistics.median(reruns), 4)
-        spread[name] = [round(min(fresh), 4), round(max(fresh), 4)]
+    # Headline rows go through collect: the driver fetches their
+    # results. Annex rows go through noop, with ONE timed run: they are
+    # round-over-round history, and collecting some of them (millions
+    # of pairs) would time the driver fetch instead of the plan.
+    records = {
+        name: time_query(spark, partial(registry[name].fn, spark, sf_dir),
+                         "collect",
+                         1 if name in STREAMING_SINGLE_RUN else N_RUNS)
+        for name in names or HEADLINE
+    }
+    annex = {
+        name: time_query(spark, partial(registry[name].fn, spark, sf_dir),
+                         "noop", 1)
+        for name in (() if names else ANNEX)
+    }
 
-    # Annex rows: timed via the noop sink (ADVICE r10 #2 — .count()
-    # let Catalyst's EliminateSorts drop each query's final global
-    # orderBy and prune projection-only columns, so the annex history
-    # could miss regressions in exactly that work; noop consumes every
-    # column and keeps the sort, executing the FULL plan without
-    # fetching multi-million-row results into the driver — the
-    # containment join's 8.28M rows OOM'd a default-heap JVM once).
-    # 1 warm + ONE timed fresh plan — the streaming-row precedent:
-    # q_containment_join alone runs ~180 s at sf0.1, so median-of-3
-    # would triple the suite's wall time to refine a number whose
-    # purpose is round-over-round HISTORY, not precision. The annex
-    # series is internally consistent from r11 on (noop-based,
-    # single-run; r10's window was count-based — annex_method records
-    # the switch) and not comparable to the collect-based headlines.
-    spark.conf.set("spark.sql.shuffle.partitions", base_parts)
-    annex: dict[str, float] = {}
-    for name in annex_names():
-        fn = registry[name].fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        annex[name] = round(time.perf_counter() - t0, 4)
-
+    timings = {n: r["sec"] for n, r in records.items()}
     total = round(sum(timings.values()), 4)
-    # The streaming drain is ~24 microbatches of ~1.3 s deterministic
-    # per-batch overhead — a different cost regime from the batch
-    # queries. value_batch_only keeps r1-r3 totals comparable.
+    # Streaming drains are a different cost regime (per-microbatch fixed
+    # overhead) from the batch queries; value_batch_only keeps r1-r3
+    # totals comparable.
     batch_only = round(
         sum(t for n, t in timings.items() if n not in STREAMING_SINGLE_RUN), 4
     )
-    line = json.dumps(
-        {
-            "metric": "headline_suite_warm_total",
-            "value": total,
-            "value_batch_only": batch_only,
-            "unit": "sec",
-            "queries": timings,
-            "annex": annex,
-            "annex_method": "noop_sink",
-            "queries_rerun_baseline_methodology": rerun,
-            "queries_spread": spread,
-            "n_runs": N_RUNS,
-            "sf": _sf_of(sf_dir),
-            "load_avg_start": load_start,
-            "load_avg_end": [round(x, 2) for x in os.getloadavg()],
-            "waited_for_quiet_sec": waited,
-        }
-    )
-    # The driver captures only the LAST 2,000 chars of stdout — the
-    # full line above is ~2.8 KB and arrived truncated in r4 AND r5
-    # (BENCH_r0{4,5}.json "parsed": null). stdout therefore gets a
-    # COMPACT line (headline totals + per-query 3-dp medians, ~1.1 KB);
-    # the spread / rerun-methodology maps live only in the durable
-    # BENCH_LOCAL.json.
-    compact = json.dumps(
-        {
-            "metric": "headline_suite_warm_total",
-            "value": total,
-            "value_batch_only": batch_only,
-            "unit": "sec",
-            "queries": {n: round(t, 3) for n, t in timings.items()},
-            "annex": {n: round(t, 3) for n, t in annex.items()},
-            "sf": _sf_of(sf_dir),
-            # contention context (~45 chars): the drift-vs-regression
-            # question every round starts with "what else was running?"
-            "load_avg_start": load_start,
-            "waited_for_quiet_sec": waited,
-        },
-        separators=(",", ":"),
-    )
+    summary = {
+        "metric": "headline_suite_warm_total",
+        "value": total,
+        "value_batch_only": batch_only,
+        "unit": "sec",
+        "queries": {n: round(t, 3) for n, t in timings.items()},
+        "annex": {n: round(r["sec"], 3) for n, r in annex.items()},
+        "sf": _sf_of(sf_dir),
+        # contention context (~45 chars): the drift-vs-regression
+        # question every round starts with "what else was running?"
+        "load_avg_start": load_start,
+        "waited_for_quiet_sec": waited,
+    }
+    # The driver captures only the LAST 2,000 chars of stdout — a ~2.8 KB
+    # line arrived truncated in r4 AND r5 (BENCH_r0{4,5}.json "parsed":
+    # null). stdout therefore gets this COMPACT line; the per-query
+    # records live only in the durable BENCH_LOCAL.json.
+    compact = json.dumps(summary, separators=(",", ":"))
     assert len(compact) < 1900, f"compact bench line {len(compact)} chars"
+    line = json.dumps(dict(
+        summary,
+        records={"queries": records, "annex": annex},
+        n_runs=N_RUNS,
+        load_avg_end=[round(x, 2) for x in os.getloadavg()],
+    ))
     # r4's driver bench JSON failed to parse because Spark progress-bar
     # frames (\r-terminated, written to stdout) interleaved with the
     # JSON line (BENCH_r04.json "parsed": null). Three-layer fix:
@@ -392,4 +311,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -87,7 +87,9 @@ def exact_avg(col: Column | str, dp: int) -> Column:
     (identical per-row doubles -> identical grid ints), accumulates
     as exact order-free int64, and performs ONE double division by
     count * 10^dp — bit-identical on both engines by construction.
-    Mirror in the oracle with :func:`sql_exact_avg`. int64 headroom:
+    Mirror in the oracle as ``CAST(sum(CAST(floor((x) * G + 0.5) AS
+    BIGINT)) AS DOUBLE) / (CAST(count(x) AS DOUBLE) * G)`` with
+    G = 10^dp written as a double literal. int64 headroom:
     |x| * 10^dp * rows must stay < 2^63 (~9.2e18) — holds for
     bounded ratios/scores at dp<=6 up to ~1e12 rows.
 
@@ -109,8 +111,8 @@ def exact_avg_wide(col: Column | str, dp: int) -> Column:
     first real case was q_try_divide's price/discount ratios, max
     ~1.05e7 at dp=4 over 3e5-row groups = 3.2e16). The per-row grid
     integer is exact in double (< 2^53) and exact in the DECIMAL cast;
-    the sum then holds to ~1e38. Oracle strings need NO change from
-    :func:`sql_exact_avg` — DuckDB already promotes sum(BIGINT) to
+    the sum then holds to ~1e38. Oracle strings keep the
+    :func:`exact_avg` shape — DuckDB already promotes sum(BIGINT) to
     HUGEINT, so it was exact all along; this brings the Spark side to
     the same bound instead of wrapping at 2^63.
     """
@@ -119,15 +121,6 @@ def exact_avg_wide(col: Column | str, dp: int) -> Column:
     return F.sum(
         F.floor(c * F.lit(g) + F.lit(0.5)).cast("decimal(38,0)")
     ).cast("double") / (F.count(c).cast("double") * F.lit(g))
-
-
-def sql_exact_avg(expr: str, dp: int) -> str:
-    """DuckDB mirror of :func:`exact_avg` for oracle strings."""
-    g = f"{float(10 ** dp):.1f}"
-    return (
-        f"CAST(sum(CAST(floor(({expr}) * {g} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / (CAST(count({expr}) AS DOUBLE) * {g})"
-    )
 
 
 def money(col: Column | str) -> Column:
@@ -211,24 +204,14 @@ def money_sum(col: Column | str) -> Column:
     ~sf300 for the fixtures' money mass (tests/test_headroom.py money
     audit). The two-step emission is bit-identical to the one-step
     below 2^53 (int->double exact, one correctly-rounded division) and
-    identical-by-construction to DuckDB at ANY scale. Mirror with
-    :func:`sql_money_sum`.
+    identical-by-construction to DuckDB at ANY scale. Mirror in
+    oracles with the one-step ``CAST(sum(CAST(x AS DECIMAL(18,2))) AS
+    DOUBLE)``: in DuckDB that cast already lowers to significand->double
+    then /scale, the same machine ops as :func:`sql_dec_sum_double`'s
+    explicit HUGEINT form, so it equals the two-step at any scale; it
+    was SPARK's one-step that diverged past 2^53.
     """
     return dec_sum_double(money(col), 2)
-
-
-def sql_money_sum(expr: str) -> str:
-    """DuckDB mirror of :func:`money_sum` for oracle strings.
-
-    Stays the one-step ``CAST(sum(DECIMAL) AS DOUBLE)``: in DuckDB
-    that cast already lowers to significand->double then /scale — the
-    SAME machine ops as :func:`sql_dec_sum_double`'s explicit HUGEINT
-    form (see dec_sum_double's divergence mechanics) — so the inline
-    oracle strings across the registry are equivalent to the two-step
-    at any scale and need no rewrite; it was SPARK's one-step that
-    diverged past 2^53.
-    """
-    return f"CAST(sum(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
 
 
 def exact_sum(col: Column | str, dp: int) -> Column:
@@ -237,23 +220,16 @@ def exact_sum(col: Column | str, dp: int) -> Column:
     Per-row 1e-dp grid pin -> exact int64 accumulation -> ONE double
     division by 10^dp (the :func:`exact_avg` recipe without the
     count): for sums of per-row float expressions (log terms, scores)
-    whose engine float sum is partition-order-dependent. Mirror with
-    :func:`sql_exact_sum`. Same int64 headroom note as exact_avg.
+    whose engine float sum is partition-order-dependent. Mirror in the
+    oracle as ``CAST(sum(CAST(floor((x) * G + 0.5) AS BIGINT)) AS
+    DOUBLE) / G`` with G = 10^dp written as a double literal. Same
+    int64 headroom note as exact_avg.
     """
     g = float(10**dp)
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(F.floor(c * F.lit(g) + F.lit(0.5)).cast("long")).cast(
         "double"
     ) / F.lit(g)
-
-
-def sql_exact_sum(expr: str, dp: int) -> str:
-    """DuckDB mirror of :func:`exact_sum` for oracle strings."""
-    g = f"{float(10 ** dp):.1f}"
-    return (
-        f"CAST(sum(CAST(floor(({expr}) * {g} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / {g}"
-    )
 
 
 # --- exact second-moment sufficient statistics (DECIMAL tier) ---------

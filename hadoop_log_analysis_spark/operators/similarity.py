@@ -236,26 +236,6 @@ def _hyperplanes(n_bits: int, dim: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
 
 
-def sign_bits(
-    vec_col: str, n_bits: int = 64, dim: int = 64, seed: int = 7
-) -> Column:
-    """Random-hyperplane sign bits of an array<float|double> column as
-    array<bigint> of 0/1 — the SimHash-for-embeddings fingerprint.
-
-    The hyperplanes are embedded as SQL literals, so the whole
-    computation is one codegen'd map expression: no Python, no shuffle.
-    """
-    planes = _hyperplanes(n_bits, dim, seed)
-    arr = ",".join(
-        "array(" + ",".join(f"{x:.9f}D" for x in row) + ")" for row in planes
-    )
-    return F.expr(
-        f"transform(array({arr}), h -> CASE WHEN "
-        f"aggregate(zip_with({vec_col}, h, (x, y) -> CAST(x AS DOUBLE) * y),"
-        f" 0D, (a, x) -> a + x) >= 0 THEN 1L ELSE 0L END)"
-    )
-
-
 def sign_bits_arrow(
     vec_col: str, n_bits: int = 128, dim: int = 64, seed: int = 7
 ) -> Column:
@@ -266,11 +246,9 @@ def sign_bits_arrow(
     measured): n_bits=128 over 64 dims is ~8k ops/row, which at 10^9
     rows is hours of lambda dispatch, while the same projection is a
     single BLAS call per batch. This is the "vectorized Pandas UDF
-    beats the built-in" case, so it is the default fingerprint path;
-    ``sign_bits`` (pure JVM expression, bit-identical and dependency-
-    free) remains for reference and tests. Boundary note: float
-    summation order can flip the sign of a ~0 dot product vs the
-    sequential JVM fold; fingerprints only gate CANDIDATES (pairs are
+    beats the built-in" case, so it is the fingerprint path. Boundary
+    note: float summation order can flip the sign of a ~0 dot product
+    vs a sequential fold; fingerprints only gate CANDIDATES (pairs are
     exact-cosine verified), so a flipped bit perturbs recall by ~0.
     """
     from pyspark.sql.functions import pandas_udf

@@ -1957,8 +1957,7 @@ def q_logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pin(ll).cast("double")
                 / (F.count("*").cast("double") * F.lit(1000000.0))
             ).alias("avg_log_lik"),
-        )
-        out.collect()  # materialize before releasing the cache
+        ).localCheckpoint(eager=True)  # materialize before releasing the cache
         return out
     finally:
         d.unpersist()

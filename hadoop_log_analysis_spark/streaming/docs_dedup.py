@@ -202,6 +202,8 @@ def _grouped_first_seen_fn(key, pdf_iter, state):
     import pandas as pd
 
     chunks = list(pdf_iter)
+    if not chunks:  # pd.concat([]) raises; an empty group emits nothing
+        return
     rows = chunks[0] if len(chunks) == 1 else pd.concat(
         chunks, ignore_index=True
     )

@@ -2,9 +2,11 @@
 """Time the heaviest queries at sf0.1 vs the derived sf1 scale probe.
 
 VERDICT r9 "What's missing" #2(c): the scaling evidence between bench
-scale and the 100 TB design arguments. For each timed query, run the
-bench methodology (1 warm + N fresh-plan executions, median) at BOTH
-scale dirs and report the per-query scaling exponent
+scale and the 100 TB design arguments. For each timed query, run
+bench.time_query through the noop sink (1 warm + N fresh-plan
+executions, median; noop keeps the final sort and the payload columns
+that .count() would let Catalyst drop) at BOTH scale dirs and report
+the per-query scaling exponent
 
     alpha = log(t_sf1 / t_sf0.1) / log(10)
 
@@ -26,10 +28,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
-import statistics
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -64,17 +66,6 @@ SPARK_ONLY = (
 )
 
 
-def median_time(fn, spark, sf_dir: str, runs: int) -> tuple[float, int]:
-    df = fn(spark, sf_dir)
-    n = df.count()  # warm: plan build + codegen + file listing
-    ts = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()  # fresh plan: full execution
-        ts.append(time.perf_counter() - t0)
-    return statistics.median(ts), n
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=3)
@@ -82,6 +73,7 @@ def main() -> int:
                     default=os.path.join(REPO, ".tmp", "scale_probe.json"))
     args = ap.parse_args()
 
+    from bench import time_query
     from hadoop_log_analysis_spark.queries import load_registry
     from hadoop_log_analysis_spark.session import get_spark
 
@@ -90,35 +82,24 @@ def main() -> int:
     spark = get_spark(app_name="hla-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import math
-
     result: dict = {"runs": args.runs, "timed": {}, "spark_only": {},
                     "load_avg_start": [round(x, 2) for x in os.getloadavg()]}
-    for name in TIMED:
-        fn = registry[name].fn
-        t0, n0 = median_time(fn, spark, BASE, args.runs)
-        t1, n1 = median_time(fn, spark, PROBE, args.runs)
-        alpha = math.log(t1 / t0) / math.log(10.0)
-        result["timed"][name] = {
-            "sf0.1_sec": round(t0, 3), "sf1_sec": round(t1, 3),
-            "sf0.1_rows": n0, "sf1_rows": n1,
-            "alpha": round(alpha, 2),
-        }
-        print(f"{name}: {t0:.2f}s -> {t1:.2f}s  alpha={alpha:.2f} "
-              f"rows {n0} -> {n1}", flush=True)
-
-    for name in SPARK_ONLY:
-        fn = registry[name].fn
-        t0, n0 = median_time(fn, spark, BASE, 1)
-        t1, n1 = median_time(fn, spark, PROBE, 1)
-        alpha = math.log(t1 / t0) / math.log(10.0)
-        result["spark_only"][name] = {
-            "sf0.1_sec": round(t0, 3), "sf1_sec": round(t1, 3),
-            "sf0.1_rows": n0, "sf1_rows": n1,
-            "alpha": round(alpha, 2),
-        }
-        print(f"{name} (spark-only): {t0:.2f}s -> {t1:.2f}s "
-              f"alpha={alpha:.2f} rows {n0} -> {n1}", flush=True)
+    for section, names, runs in (("timed", TIMED, args.runs),
+                                 ("spark_only", SPARK_ONLY, 1)):
+        for name in names:
+            fn = registry[name].fn
+            r0, r1 = (time_query(spark, partial(fn, spark, d), "noop", runs)
+                      for d in (BASE, PROBE))
+            alpha = math.log(r1["sec"] / r0["sec"]) / math.log(10.0)
+            result[section][name] = {
+                "sf0.1_sec": round(r0["sec"], 3),
+                "sf1_sec": round(r1["sec"], 3),
+                "sf0.1_rows": r0["rows"], "sf1_rows": r1["rows"],
+                "alpha": round(alpha, 2),
+            }
+            print(f"{name} ({section}): {r0['sec']:.2f}s -> {r1['sec']:.2f}s "
+                  f"alpha={alpha:.2f} rows {r0['rows']} -> {r1['rows']}",
+                  flush=True)
 
     result["load_avg_end"] = [round(x, 2) for x in os.getloadavg()]
     with open(args.out, "w") as f:

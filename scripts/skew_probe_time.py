@@ -10,8 +10,9 @@ run, the heaviest stage's STRAGGLER RATIO
 
     ratio = max task executorRunTime / median task executorRunTime
 
-from the Spark UI REST API (/stages/{id}/{attempt}/taskSummary), plus
-wall time and rows. It then demonstrates each defense ENGAGING:
+from Spark's status store (AppStatusStore.taskSummary, which answers
+with the UI off), plus wall time and rows timed by bench.time_query.
+It then demonstrates each defense ENGAGING:
 
 * AQE skew-join split: the naive events-x-customer sort-merge join on
   the hot user key, run (a) with skew-split disabled and (b) enabled —
@@ -49,8 +50,6 @@ import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -66,23 +65,10 @@ SKEW_CONFS = {
 }
 
 
-def _ui_get(spark, path: str):
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/{path}", timeout=15
-    ) as r:
-        return json.load(r)
-
-
-def _completed_stage_ids(spark) -> set[int]:
-    return {s["stageId"] for s in _ui_get(spark, "stages?status=COMPLETE")}
-
-
-def _shuffle_stage_stats(spark, before: set[int]) -> dict:
-    """Straggler stats of the new stage with the largest total shuffle
-    READ — the reduce side where key skew lands. Two per-task ratios
-    from taskSummary quantiles (median, max):
+def _shuffle_stage_stats(spark, stage_keys) -> dict:
+    """Straggler stats of the stage in ``stage_keys`` with the largest
+    total shuffle READ — the reduce side where key skew lands. Two
+    per-task ratios from taskSummary quantiles (median, max):
 
     * bytes_ratio: shuffle-read bytes — the scale-independent skew
       signal (a hot partition reads its key's full share no matter how
@@ -91,25 +77,22 @@ def _shuffle_stage_stats(spark, before: set[int]) -> dict:
     * time_ratio: executorRunTime — the wall-clock straggler, what the
       bytes turn into at 100 TB partition sizes.
     """
-    stages = [
-        s for s in _ui_get(spark, "stages?status=COMPLETE")
-        if s["stageId"] not in before and s.get("shuffleReadBytes", 0) > 0
-    ]
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stages = [store.lastStageAttempt(sid) for sid, _ in stage_keys]
+    stages = [s for s in stages if s.shuffleReadBytes() > 0]
     if not stages:
         return {}
-    heavy = max(stages, key=lambda s: s.get("shuffleReadBytes", 0))
-    ts = _ui_get(
-        spark,
-        f"stages/{heavy['stageId']}/{heavy['attemptId']}"
-        "/taskSummary?quantiles=0.5,1.0",
-    )
-    t_med, t_max = ts["executorRunTime"]
-    b_med, b_max = ts.get("shuffleReadMetrics", {}).get(
-        "readBytes", [0.0, 0.0]
-    )
+    heavy = max(stages, key=lambda s: s.shuffleReadBytes())
+    quantiles = sc._gateway.new_array(sc._jvm.double, 2)
+    quantiles[0], quantiles[1] = 0.5, 1.0
+    ts = store.taskSummary(heavy.stageId(), heavy.attemptId(), quantiles).get()
+    t_med, t_max = (ts.executorRunTime().apply(i) for i in (0, 1))
+    read = ts.shuffleReadMetrics().readBytes()
+    b_med, b_max = read.apply(0), read.apply(1)
     return {
-        "n_tasks": heavy["numCompleteTasks"],
-        "shuffle_read_mb": round(heavy["shuffleReadBytes"] / 1e6, 2),
+        "n_tasks": heavy.numCompleteTasks(),
+        "shuffle_read_mb": round(heavy.shuffleReadBytes() / 1e6, 2),
         "med_task_read_kb": round(b_med / 1e3, 1),
         "max_task_read_kb": round(b_max / 1e3, 1),
         "bytes_ratio": round(b_max / b_med, 2) if b_med > 0 else None,
@@ -121,45 +104,37 @@ def _shuffle_stage_stats(spark, before: set[int]) -> dict:
 
 def measure(spark, tag: str, thunk, confs: dict | None = None,
             assert_skewed: bool | None = None, collect: bool = False) -> dict:
-    """Warm once, then time one fresh-plan execution and read the
-    heaviest shuffle stage's task stats from the UI REST API.
+    """Time one fresh-plan execution with bench.time_query (collect or
+    noop sink) and read the heaviest shuffle stage's task stats.
 
     Conf overrides are applied AFTER each thunk() builds its DataFrame:
     query builders go through sources.catalog.scan, which re-asserts
     session.REQUIRED_CONFS (skewJoin/coalesce back on) — overriding
     post-build is what makes the off-switch demonstrations real. AQE
     confs are read at execution start, so post-build overrides bind.
+    The noop sink (not count()) keeps the payload work: count() let
+    Catalyst prune the inverted index's collect_list, so the postings
+    shuffle measured 0.01 MB instead of ~14 MB.
     """
-    saved = {}
+    from bench import time_query
 
-    def _apply() -> None:
+    saved = {}
+    built = []
+
+    def build():
+        df = thunk()
         for k, v in (confs or {}).items():
-            if k not in saved:
-                saved[k] = spark.conf.get(k, None)
+            saved.setdefault(k, spark.conf.get(k, None))
             spark.conf.set(k, v)
+        built.append(df)
+        return df
 
     try:
-        warm = thunk()
-        _apply()
-        n = warm.count()  # warm: codegen + file listing (+ row count)
-        before = _completed_stage_ids(spark)
-        t0 = time.perf_counter()
-        df = thunk()
-        _apply()
-        if collect:
-            rows = df.collect()
-            n = len(rows)
-        else:
-            # count() would let Catalyst prune the payload work (e.g.
-            # the inverted index's collect_list vanishes — the postings
-            # shuffle measured 0.01 MB instead of ~14 MB); the noop
-            # sink consumes every column, preserving the full plan.
-            df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        out = {"sec": round(dt, 3), "rows": n}
-        out.update(_shuffle_stage_stats(spark, before))
+        rec = time_query(spark, build, "collect" if collect else "noop", 1)
+        out = {"sec": round(rec["sec"], 3), "rows": rec["rows"]}
+        out.update(_shuffle_stage_stats(spark, rec["stage_keys"]))
         if assert_skewed is not None:
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = built[-1]._jdf.queryExecution().executedPlan().toString()
             fired = any("skewed" in line for line in plan.splitlines())
             out["aqe_skew_split_fired"] = fired
             if fired != assert_skewed:
@@ -197,23 +172,13 @@ def main() -> int:
 
     from hadoop_log_analysis_spark.operators.skew import salted_join
     from hadoop_log_analysis_spark.queries import load_registry
-    from hadoop_log_analysis_spark.session import REQUIRED_CONFS
+    from hadoop_log_analysis_spark.session import get_spark
     from hadoop_log_analysis_spark.sources.catalog import scan
-    from pyspark.sql import SparkSession
 
-    builder = (
-        SparkSession.builder.master("local[16]")
-        .appName("hla-skew-probe")
-        .config("spark.ui.enabled", "true")  # REST API is the metric source
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("HLA_DRIVER_MEM", "16g"))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-    )
-    for k, v in REQUIRED_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # 32 shuffle partitions, whatever the core count: the byte ratios
+    # below are per-partition shares, so they depend on it.
+    os.environ.setdefault("HLA_DRIVER_MEM", "16g")
+    spark = get_spark(app_name="hla-skew-probe", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_registry()
 

@@ -2316,6 +2316,20 @@ def test_bfs_checkpoint_cadence_invariant(spark, monkeypatch):
     assert base and base == k2
 
 
+def test_logistic_irls_returns_materialized_result(spark):
+    """q_logistic_irls unpersists its cached scan before returning, so
+    the returned plan must already be materialized: a plan that still
+    reads the documents parquet re-runs the final aggregate over an
+    uncached scan on every action the caller takes."""
+    from hadoop_log_analysis_spark.queries import load_registry
+    from tests.conftest import SF0001
+
+    df = load_registry()["q_logistic_irls"].fn(spark, SF0001)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "parquet" not in plan.lower(), plan
+    assert df.count() == 1
+
+
 def test_dec_sum_double_crosses_2_53_identically(spark):
     """functions.dec_sum_double (r10, sf1-probe finding): the emission
     must match DuckDB's sql_dec_sum_double mirror EXACTLY even when

@@ -255,6 +255,24 @@ def test_stream_minhash_dedup_matches_greedy_simulation(spark):
         assert kept == all_ids - {d for d, _, _ in expected}
 
 
+def test_grouped_first_seen_empty_group_emits_nothing():
+    """Under a state timeout Spark invokes a group with no rows (it runs
+    with NoTimeout today): the grouped first-seen function must emit
+    nothing and leave the state alone instead of failing in
+    pd.concat([])."""
+    from hadoop_log_analysis_spark.streaming.docs_dedup import (
+        _grouped_first_seen_fn,
+    )
+
+    class _NoState:
+        exists = False
+
+        def update(self, value):
+            raise AssertionError(f"state written without rows: {value}")
+
+    assert list(_grouped_first_seen_fn((0,), iter([]), _NoState())) == []
+
+
 def test_stream_knn_batch_boundary_invariant(spark):
     """T8xL3 (streaming/retrieval.py): retrieval is stateless, so the
     drained top-k must be IDENTICAL under different microbatch widths
