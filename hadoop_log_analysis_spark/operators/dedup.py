@@ -342,10 +342,13 @@ _MASK_VOCAB_MAX = 64
 # only the residual case of a threshold whose double product lands a
 # hair above an integer at very large |x|: subtracting 1e-9 before the
 # ceil can only LENGTHEN the prefix (candidate superset -> recall-safe;
-# the exact verify keeps the output byte-identical). 1e-9 is far above
-# double rounding error at |x| <= 2^31 yet far below any honest
-# threshold granularity, so no legitimate boundary moves — measured:
-# candidate counts are unchanged on the fixtures.
+# the exact verify keeps the output byte-identical). 1e-9 is above the
+# double rounding error of the product only while t * |x| < 2^23 (one
+# ulp there is at most 2^-30 ~ 9.3e-10; past it the guard is smaller
+# than an ulp and does nothing), and far below any honest threshold
+# granularity, so no legitimate boundary moves — measured: candidate
+# counts are unchanged on the fixtures. No fixture or probe set comes
+# near 2^23 tokens per set.
 _CEIL_GUARD = 1e-9
 
 

@@ -38,6 +38,7 @@ from hadoop_log_analysis_spark.functions import (
 from hadoop_log_analysis_spark.queries import query
 from hadoop_log_analysis_spark.operators.partitioning import maybe_broadcast
 from hadoop_log_analysis_spark.operators.ranking import exact_rank
+from hadoop_log_analysis_spark.scratch import run_dir
 from hadoop_log_analysis_spark.sources.catalog import scan, table_bytes
 
 # Warm-up for the anomaly baseline: a trailing mean/std over fewer
@@ -608,13 +609,8 @@ def q_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     = dynamic partition overwrite of touched hours
     (q_incremental_overwrite is the template).
     """
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    hourly_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp",
-        f"rollup_hourly_{tag}",
+    hourly_path = run_dir(
+        spark.sparkContext.applicationId, "rollup_hourly", sf_dir
     )
     hourly = (
         scan(spark, sf_dir, "events")

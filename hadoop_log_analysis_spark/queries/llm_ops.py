@@ -38,6 +38,7 @@ from hadoop_log_analysis_spark.functions import (
     sql_pin,
 )
 from hadoop_log_analysis_spark.queries import query
+from hadoop_log_analysis_spark import scratch
 from hadoop_log_analysis_spark.sources.catalog import scan
 
 # Planted-id offset memo keyed by (session app id, sf_dir): the
@@ -258,11 +259,6 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("a_id", "b_id")
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return f"/root/repo/.tmp/ivf_index_{tag}"
-
-
 @query("q_ann_ivf", oracle=None, tags=("L4",))
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4: approximate top-10 via a PERSISTED IVF index — the coarse
@@ -274,17 +270,10 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness story: recall vs the fully-oracled exact q_cosine_knn
     is unit-tested (recall floor + n_probe monotonicity), and the
     probe plan (no posexplode, no full scan) is plan-tested."""
-    import os
-
     emb = scan(spark, sf_dir, "embeddings")
-    index_dir = _ivf_index_dir(sf_dir)
-    # an index is complete only with its schema manifest (written last;
-    # pre-manifest or interrupted builds are rebuilt)
-    if not (
-        os.path.exists(f"{index_dir}/assignments/_SUCCESS")
-        and os.path.exists(f"{index_dir}/_schemas.json")
-    ):
-        ivf_build(spark, emb, index_dir)
+    index_dir = scratch.cached(
+        "ivf_index", sf_dir, lambda path: ivf_build(spark, emb, path)
+    )
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("__qvec")
     )

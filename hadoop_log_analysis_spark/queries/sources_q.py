@@ -4,8 +4,10 @@ Roundtrip queries derive a raw file (text log / CSV / JSON / parquet)
 from a fixture table, read it back through the corresponding source,
 and aggregate — the oracle computes the same aggregate straight from
 the parquet view, so the roundtrip itself is what's verified.
-Derived files live under .tmp/ keyed by scale factor (deterministic
-content, overwritten per run).
+Each query writes its derived files into its own per-application
+scratch directory (``scratch.run_dir``), overwritten on every call; only
+the app-log text files read through the Python DataSource are cached
+per input (``sources.logs.app_log_dir``).
 """
 
 from __future__ import annotations
@@ -18,20 +20,15 @@ from pyspark.sql import types as T
 
 from hadoop_log_analysis_spark.functions import money, money_sum
 from hadoop_log_analysis_spark.queries import query
+from hadoop_log_analysis_spark.scratch import run_dir
 from hadoop_log_analysis_spark.sources.catalog import scan
 from hadoop_log_analysis_spark.sources.logs import (
-    format_events_as_log_lines,
+    app_log_dir,
     parse_app_log,
     read_text_logs,
+    write_app_log,
 )
 from hadoop_log_analysis_spark.sources.sinks import read_back, write_partitioned
-
-_TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp")
-
-
-def _derived_dir(sf_dir: str, kind: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_TMP, f"derived_{kind}_{tag}")
 
 
 @query(
@@ -60,13 +57,8 @@ def q_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to typed columns dropping the malformed, aggregate. The oracle
     computes the same aggregate from the original parquet — verifying
     the full text roundtrip + parse."""
-    path = _derived_dir(sf_dir, "textlog")
-    events = scan(spark, sf_dir, "events")
-    lines = format_events_as_log_lines(events)
-    garbage = spark.createDataFrame(
-        [("this is not a log line",), ("evt|malformed",), ("",)], ["value"]
-    )
-    lines.unionByName(garbage).coalesce(4).write.mode("overwrite").text(path)
+    path = run_dir(spark.sparkContext.applicationId, "textlog", sf_dir)
+    write_app_log(spark, sf_dir, path)
     parsed = parse_app_log(read_text_logs(spark, path))
     return (
         parsed.groupBy("event_type")
@@ -87,7 +79,7 @@ def q_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: CSV sink + header/schema CSV source roundtrip."""
-    path = _derived_dir(sf_dir, "csv")
+    path = run_dir(spark.sparkContext.applicationId, "csv", sf_dir)
     orders = scan(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -119,7 +111,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: JSON-lines sink + source roundtrip."""
-    path = _derived_dir(sf_dir, "json")
+    path = run_dir(spark.sparkContext.applicationId, "json", sf_dir)
     events = scan(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     events.coalesce(4).write.mode("overwrite").json(path)
     schema = T.StructType(
@@ -152,7 +144,7 @@ def q_parquet_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: event_type-partitioned parquet sink; the read-back filter on
     the partition column prunes to the error/ directory only (partition
     pruning is asserted in tests/test_plans.py)."""
-    path = _derived_dir(sf_dir, "parquet_part")
+    path = run_dir(spark.sparkContext.applicationId, "parquet_part", sf_dir)
     events = scan(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -187,7 +179,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC shares parquet's scan features (pushdown, column pruning,
     vectorized reader) — at scale it's a drop-in layout choice.
     """
-    path = _derived_dir(sf_dir, "orc")
+    path = run_dir(spark.sparkContext.applicationId, "orc", sf_dir)
     events = scan(spark, sf_dir, "events").drop("ts_ns")
     events.coalesce(4).write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
@@ -221,7 +213,7 @@ def q_incremental_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline repairs one day of a 100 TB date-partitioned table
     without touching the other 364.
     """
-    path = _derived_dir(sf_dir, "dyn_overwrite")
+    path = run_dir(spark.sparkContext.applicationId, "dyn_overwrite", sf_dir)
     orders = scan(spark, sf_dir, "orders")
     stale = orders.withColumn(
         "o_totalprice",
@@ -276,8 +268,9 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
 
-    src = _derived_dir(sf_dir, "small_files")
-    dst = _derived_dir(sf_dir, "compacted")
+    app = spark.sparkContext.applicationId
+    src = run_dir(app, "small_files", sf_dir)
+    dst = run_dir(app, "compacted", sf_dir)
     target_bytes = 16 << 20
     ev = scan(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -319,7 +312,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference over XML is a full extra pass at 100 TB), aggregate,
     and hash-match the original table.
     """
-    path = _derived_dir(sf_dir, "xml")
+    path = run_dir(spark.sparkContext.applicationId, "xml", sf_dir)
     orders = scan(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -380,7 +373,7 @@ def q_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB of third-party logs. Valid counts must equal the batch
     table; corrupt count must equal exactly the injected lines.
     """
-    path = _derived_dir(sf_dir, "json_malformed")
+    path = run_dir(spark.sparkContext.applicationId, "json_malformed", sf_dir)
     events = scan(spark, sf_dir, "events").select("event_id", "event_type")
     events.write.mode("overwrite").json(path)
     with open(os.path.join(path, "zz-garbage.json"), "w") as fh:
@@ -439,17 +432,7 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hadoop_log_analysis_spark.sources.pydatasource import AppLogDataSource
 
-    path = _derived_dir(sf_dir, "textlog")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        events = scan(spark, sf_dir, "events")
-        lines = format_events_as_log_lines(events)
-        garbage = spark.createDataFrame(
-            [("this is not a log line",), ("evt|malformed",), ("",)],
-            ["value"],
-        )
-        lines.unionByName(garbage).coalesce(4).write.mode("overwrite").text(
-            path
-        )
+    path = app_log_dir(spark, sf_dir)
     try:
         spark.dataSource.register(AppLogDataSource)
     except Exception:
@@ -512,7 +495,7 @@ def q_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_features,
     )
 
-    out_dir = _derived_dir(sf_dir, "binaryfiles")
+    out_dir = run_dir(spark.sparkContext.applicationId, "binaryfiles", sf_dir)
     os.makedirs(out_dir, exist_ok=True)
     docs = scan(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     payloads = attach_synthetic_binary(docs).select(
@@ -602,15 +585,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep mergeSchema for the backfill jobs that actually need it.
     """
     cut = F.lit("2024-01-16").cast("timestamp")
-    # Session-unique derived dir (ADVICE r5): unlike the sibling
-    # derived-dir queries this one WRITES on every call, so two
-    # concurrent sessions on the same sf_dir (parallel pytest +
-    # bench) could race a mergeSchema read against an in-progress
-    # overwrite. Suffixing with applicationId keeps the re-derive
-    # staleness rationale while giving each session its own dir.
-    out_dir = _derived_dir(
-        sf_dir, f"schema_evo_{spark.sparkContext.applicationId}"
-    )
+    out_dir = run_dir(spark.sparkContext.applicationId, "schema_evo", sf_dir)
     ev = scan(spark, sf_dir, "events")
     (
         ev.filter(F.col("ts") < cut)
@@ -675,8 +650,9 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate straight off the events table — verifying that pruning
     changed I/O, not results.
     """
-    out_dir = _derived_dir(sf_dir, "dpp_events")
-    dim_dir = _derived_dir(sf_dir, "dpp_dates")
+    app = spark.sparkContext.applicationId
+    out_dir = run_dir(app, "dpp_events", sf_dir)
+    dim_dir = run_dir(app, "dpp_dates", sf_dir)
     ev = scan(spark, sf_dir, "events")
     (
         ev.select(
@@ -764,14 +740,15 @@ def q_wap_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged batch (no second pipeline); the publish step is a metadata
     operation (rename), not a rewrite — the same atomicity contract a
     table format (Iceberg/Delta snapshot commit) provides, expressed
-    on plain directories. Dirs are session-unique (applicationId
-    suffix) so concurrent sessions stage/publish independently.
+    on plain directories. Dirs are per application
+    (``scratch.run_dir``) so concurrent sessions stage/publish
+    independently.
     """
     import shutil
 
     app = spark.sparkContext.applicationId
-    stage_dir = _derived_dir(sf_dir, f"wap_stage_{app}")
-    pub_dir = _derived_dir(sf_dir, f"wap_published_{app}")
+    stage_dir = run_dir(app, "wap_stage", sf_dir)
+    pub_dir = run_dir(app, "wap_published", sf_dir)
     cleaned = (
         scan(spark, sf_dir, "documents")
         .filter(F.col("n_chars") >= 100)
@@ -847,8 +824,7 @@ def q_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the join of [untouched partitions + rewritten partitions]
     proves the rewrite deleted exactly the cohort and nothing else.
     """
-    app = spark.sparkContext.applicationId
-    lake = _derived_dir(sf_dir, f"gdpr_lake_{app}")
+    lake = run_dir(spark.sparkContext.applicationId, "gdpr_lake", sf_dir)
     ev = scan(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value",
         (F.col("user_id") % 8).alias("u_bkt"),

@@ -27,9 +27,9 @@ from pyspark.sql import types as T
 
 from hadoop_log_analysis_spark.functions import money_sum, subus_key
 from hadoop_log_analysis_spark.queries import query
+from hadoop_log_analysis_spark.scratch import run_dir
 from hadoop_log_analysis_spark.sources.catalog import scan
 from hadoop_log_analysis_spark.streaming.events_stream import (
-    TMP,
     ckpt_path,
     derive_drop_dir,
     read_events_stream,
@@ -353,9 +353,7 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     batchId overwrite), then read back and aggregated; must equal the
     batch table (SQL oracle)."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(
-        TMP, f"stream_sink_{tag}_{spark.sparkContext.applicationId}"
-    )
+    out_dir = run_dir(spark.sparkContext.applicationId, "stream_sink", sf_dir)
     drop = derive_drop_dir(spark, sf_dir)
     events = read_events_stream(spark, drop)
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -539,8 +537,8 @@ def q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop = derive_drop_dir(spark, sf_dir)
     tag = os.path.basename(os.path.normpath(sf_dir))
     app = spark.sparkContext.applicationId
-    stage = os.path.join(TMP, f"recovery_stage_{tag}_{app}")
-    out = os.path.join(TMP, f"recovery_out_{tag}_{app}")
+    stage = run_dir(app, "recovery_stage", sf_dir)
+    out = run_dir(app, "recovery_out", sf_dir)
     ckpt = ckpt_path(f"recovery_{tag}", app)
     for p in (stage, out, ckpt):
         shutil.rmtree(p, ignore_errors=True)
@@ -989,25 +987,12 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     a source Spark has no native reader for. Batch twin:
     q_python_datasource.
     """
-    from hadoop_log_analysis_spark.queries.sources_q import _derived_dir
-    from hadoop_log_analysis_spark.sources.logs import (
-        format_events_as_log_lines,
-    )
+    from hadoop_log_analysis_spark.sources.logs import app_log_dir
     from hadoop_log_analysis_spark.sources.pydatasource import (
         AppLogStreamDataSource,
     )
 
-    path = _derived_dir(sf_dir, "textlog")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        events = scan(spark, sf_dir, "events")
-        lines = format_events_as_log_lines(events)
-        garbage = spark.createDataFrame(
-            [("this is not a log line",), ("evt|malformed",), ("",)],
-            ["value"],
-        )
-        lines.unionByName(garbage).coalesce(4).write.mode("overwrite").text(
-            path
-        )
+    path = app_log_dir(spark, sf_dir)
     try:
         spark.dataSource.register(AppLogStreamDataSource)
     except Exception:
@@ -1070,8 +1055,8 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    state_root = os.path.join(
-        TMP, f"stream_cdc_state_{tag}_{spark.sparkContext.applicationId}"
+    state_root = run_dir(
+        spark.sparkContext.applicationId, "stream_cdc_state", sf_dir
     )
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root, exist_ok=True)
@@ -1476,9 +1461,7 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(
-        TMP, f"stream_knn_{tag}_{spark.sparkContext.applicationId}"
-    )
+    out_dir = run_dir(spark.sparkContext.applicationId, "stream_knn", sf_dir)
     corpus = scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # Retrieval is stateless, so the result is batch-boundary invariant.
     r = REPLAY["knn"]
@@ -1528,8 +1511,8 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(
-        TMP, f"stream_knn_ivf_{tag}_{spark.sparkContext.applicationId}"
+    out_dir = run_dir(
+        spark.sparkContext.applicationId, "stream_knn_ivf", sf_dir
     )
     corpus = scan(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"

@@ -15,8 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_log_analysis_spark.scratch import cached
+from hadoop_log_analysis_spark.sources.catalog import scan
+
 # Pipe-delimited app-log line: evt|<event_id>|<user_id>|<event_type>|<props>
 APP_LOG_PATTERN = r"^evt\|(\d+)\|(\d+)\|([a-z]+)\|(\{.*\})$"
+
+# Lines every derived log carries besides the events; all parsers drop them.
+MALFORMED_LINES = ("this is not a log line", "evt|malformed", "")
 
 
 def read_text_logs(spark: SparkSession, path: str) -> DataFrame:
@@ -24,10 +30,12 @@ def read_text_logs(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path)
 
 
-def format_events_as_log_lines(events: DataFrame) -> DataFrame:
-    """Render typed events as raw log lines (the inverse of parsing;
-    used to derive deterministic log fixtures from the events table)."""
-    return events.select(
+def write_app_log(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Render ``sf_dir``'s events as raw app-log lines (the inverse of
+    parsing) plus :data:`MALFORMED_LINES`, written as 4 text files at
+    ``path`` (overwritten)."""
+    events = scan(spark, sf_dir, "events")
+    lines = events.select(
         F.concat_ws(
             "|",
             F.lit("evt"),
@@ -36,6 +44,16 @@ def format_events_as_log_lines(events: DataFrame) -> DataFrame:
             F.col("event_type"),
             F.col("props"),
         ).alias("value")
+    )
+    garbage = spark.createDataFrame([(x,) for x in MALFORMED_LINES], ["value"])
+    lines.unionByName(garbage).coalesce(4).write.mode("overwrite").text(path)
+
+
+def app_log_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The cached app-log text files of ``sf_dir`` (see
+    :func:`write_app_log`), built on first use."""
+    return cached(
+        "textlog", sf_dir, lambda path: write_app_log(spark, sf_dir, path)
     )
 
 

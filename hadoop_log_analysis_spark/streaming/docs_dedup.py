@@ -65,7 +65,7 @@ from hadoop_log_analysis_spark.operators.dedup import (
     band_hash_expr,
     minhash_signature,
 )
-from hadoop_log_analysis_spark.streaming.events_stream import cached_drop
+from hadoop_log_analysis_spark.scratch import cached
 
 # Synthetic arrival clock for the documents fixture (it has no event
 # time): doc_id seconds after 2024-01-01T00:00:00Z. Strictly
@@ -109,7 +109,7 @@ def derive_docs_drop_dir(
             .json(path)
         )
 
-    return cached_drop(f"docs_drop_{n_files}f", sf_dir, build)
+    return cached(f"docs_drop_{n_files}f", sf_dir, build)
 
 
 def read_docs_stream(

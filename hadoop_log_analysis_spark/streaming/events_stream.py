@@ -21,7 +21,6 @@ not one giant batch.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
@@ -31,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-TMP = os.path.join(_REPO, ".tmp")
+from hadoop_log_analysis_spark.scratch import cached, run_dir
 
 # Drain deadline: a harness bound, not part of any query's semantics.
 # Read at call time, so a long probe run can raise it on the module.
@@ -48,58 +46,6 @@ DROP_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
-
-
-def stamp_replay_order(path: str) -> None:
-    """mtime-stamp a drop dir's ``part-*.json`` files strictly increasing
-    in name order. The file source replays files in modification-time
-    order; a single batch write stamps them identically, which would
-    randomize replay order and break every time-ordered-replay contract
-    (T4/T5 watermarks, first-seen dedup, the outer joins' sentinels).
-    Part numbering follows repartitionByRange order, so part-00000 is
-    the earliest time slice, and sentinel files (``part-zz-…``) sort
-    last. Idempotent on a stamped dir; repairs one whose mtimes were
-    flattened (``cp -r``, archive extraction)."""
-    parts = sorted(
-        f for f in os.listdir(path) if f.startswith("part-") and f.endswith(".json")
-    )
-    base = (
-        os.path.getmtime(os.path.join(path, parts[0]))
-        if parts
-        else os.path.getmtime(path)
-    )
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(path, f), (base + 10 * i, base + 10 * i))
-
-
-def cached_drop(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
-    """The replay drop dir ``kind`` derived from the input ``sf_dir``,
-    built by ``build(path)`` on first use and cached under ``.tmp``.
-
-    The cache entry is named after the input's basename plus a hash of
-    its resolved path, and its ``_READY`` marker records that path, so
-    two inputs sharing a basename never share an entry. Replay order
-    lives only in the files' mtimes, so every hit re-applies
-    :func:`stamp_replay_order`: a cached dir whose mtimes were
-    flattened replays in order again instead of silently changing the
-    answer."""
-    src = os.path.realpath(sf_dir)
-    digest = hashlib.sha1(src.encode()).hexdigest()[:8]
-    path = os.path.join(
-        TMP, f"{kind}_{os.path.basename(os.path.normpath(sf_dir))}_{digest}"
-    )
-    marker = os.path.join(path, "_READY")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read() == src:
-                stamp_replay_order(path)
-                return path
-    shutil.rmtree(path, ignore_errors=True)
-    build(path)
-    stamp_replay_order(path)
-    with open(marker, "w") as fh:
-        fh.write(src)
-    return path
 
 
 def derive_drop_dir(
@@ -189,7 +135,7 @@ def derive_drop_dir(
             with open(sfile, "w") as fh:
                 fh.write(json.dumps(sentinel) + "\n")
 
-    return cached_drop(f"stream_drop_{variant}_{n_files}f", sf_dir, build)
+    return cached(f"stream_drop_{variant}_{n_files}f", sf_dir, build)
 
 
 def read_events_stream(
@@ -221,7 +167,7 @@ def ckpt_path(name: str, app_id: str) -> str:
     (scripts/stream_state_skew.py) derives the SAME path instead of
     hard-coding the convention — a rename there must break loudly,
     not silently profile an empty directory."""
-    return os.path.join(TMP, f"stream_ckpt_{name}_{app_id}")
+    return run_dir(app_id, f"stream_ckpt_{name}")
 
 
 def run_drain(

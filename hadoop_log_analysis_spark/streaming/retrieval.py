@@ -45,10 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hadoop_log_analysis_spark.streaming.events_stream import (
-    cached_drop,
-    run_drain,
-)
+from hadoop_log_analysis_spark.scratch import cached
+from hadoop_log_analysis_spark.streaming.events_stream import run_drain
 
 # Same synthetic arrival clock convention as docs_dedup.
 QUERY_BASE_US = 1_704_067_200 * 1_000_000
@@ -93,7 +91,7 @@ def derive_query_drop_dir(
             .json(path)
         )
 
-    return cached_drop(f"emb_query_drop_{every}_{n_files}f", sf_dir, build)
+    return cached(f"emb_query_drop_{every}_{n_files}f", sf_dir, build)
 
 
 def read_query_stream(

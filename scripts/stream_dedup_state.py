@@ -38,8 +38,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TMP = os.path.join(REPO, ".tmp")
+from hadoop_log_analysis_spark.scratch import ROOT as TMP  # noqa: E402
 
 
 def main() -> int:
@@ -56,6 +55,11 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
+    from hadoop_log_analysis_spark.scratch import (
+        remove_run,
+        run_dir,
+        stamp_replay_order,
+    )
     from hadoop_log_analysis_spark.session import get_spark
     from hadoop_log_analysis_spark.sources.catalog import scan
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
@@ -67,7 +71,6 @@ def main() -> int:
     from hadoop_log_analysis_spark.streaming.events_stream import (
         ckpt_path,
         run_drain,
-        stamp_replay_order,
     )
     from scripts.stream_state_skew import state_profile
 
@@ -84,7 +87,6 @@ def main() -> int:
     app = spark.sparkContext.applicationId
     # allow 600 s per drain, double the default
     events_stream.DRAIN_TIMEOUT_S = 600
-    tag = os.path.basename(os.path.normpath(args.sf_dir))
 
     docs = scan(spark, args.sf_dir, "documents")
     hot_text = (
@@ -105,7 +107,7 @@ def main() -> int:
     for fname, fdf in feeds.items():
         # probe-specific drop dir (same replay scheme as
         # docs_dedup.derive_docs_drop_dir, built from the variant df)
-        drop = os.path.join(TMP, f"docs_drop_probe_{fname}_{tag}")
+        drop = run_dir(app, f"docs_drop_probe_{fname}", args.sf_dir)
         shutil.rmtree(drop, ignore_errors=True)
         (
             fdf.select(
@@ -156,6 +158,7 @@ def main() -> int:
         json.dump(result, f, indent=1)
     print("WROTE", args.out, flush=True)
     spark.stop()
+    remove_run(app)
     return 0
 
 

@@ -39,8 +39,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TMP = os.path.join(REPO, ".tmp")
+from hadoop_log_analysis_spark.scratch import ROOT as TMP  # noqa: E402
 
 
 def dir_bytes(path: str) -> int:
@@ -100,6 +99,7 @@ def main() -> int:
         T8_LEFT_TABLE,
     )
     from hadoop_log_analysis_spark.session import get_spark
+    from hadoop_log_analysis_spark.scratch import remove_run
     from hadoop_log_analysis_spark.streaming.events_stream import ckpt_path
 
     spark = get_spark(app_name="hla-stream-state-skew")
@@ -176,6 +176,7 @@ def main() -> int:
         json.dump(result, f, indent=1)
     print("WROTE", args.out, flush=True)
     spark.stop()
+    remove_run(app)
     return 0
 
 

@@ -1,7 +1,8 @@
 """The package reads no tuning knobs from the environment: replay
 cadences, state partitions, widths and timeouts are module constants
 (streaming_q.REPLAY and friends). Only the deployment settings in
-session.py may come from the environment."""
+session.py may come from the environment. Likewise only scratch.py
+names a place on disk to write to."""
 
 from __future__ import annotations
 
@@ -58,3 +59,36 @@ def test_package_reads_only_deployment_env():
                 bad.append(f"{where} reads {key or 'the environment'}")
     assert not bad, "environment knobs in the package:\n" + "\n".join(bad)
     assert found == ALLOWED, f"scanner missed the deployment settings: {found}"
+
+
+def _string_literals(tree: ast.AST):
+    """(line, text) for every string constant that is not a docstring."""
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+        ):
+            yield node.lineno, node.value
+
+
+def test_only_scratch_names_the_scratch_root():
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == PKG / "scratch.py":
+            continue
+        for line, text in _string_literals(ast.parse(path.read_text())):
+            if ".tmp" in text or "/root/" in text:
+                bad.append(f"{path.relative_to(PKG.parent)}:{line}: {text!r}")
+    assert not bad, "scratch paths outside scratch.py:\n" + "\n".join(bad)

@@ -153,17 +153,14 @@ def test_sign_band_lsh_equals_bruteforce_on_near_dups(spark):
     assert banded == exact, f"banded missed pairs: {sorted(exact - banded)[:5]}"
 
 
-def test_ivf_persisted_probe_matches_monolith(spark):
+def test_ivf_persisted_probe_matches_monolith(spark, tmp_path):
     """VERDICT r1 item 3: probing the persisted IVF index (build once,
     probe many) must return exactly what the build-inline monolith
     returns for the same (query, k, n_probe)."""
-    import shutil
-
     from hadoop_log_analysis_spark.operators.similarity import ivf_build, ivf_probe
 
     emb = scan(spark, SF001, "embeddings")
-    idx = "/root/repo/.tmp/ivf_index_unittest"
-    shutil.rmtree(idx, ignore_errors=True)
+    idx = str(tmp_path / "ivf_index")
     ivf_build(spark, emb, idx)
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__qvec"))
     probed = [

@@ -56,9 +56,10 @@ def test_partition_pruning_on_partitioned_sink(spark):
     # q_parquet_sink_partitioned writes event_type-partitioned parquet;
     # re-reading with the partition filter must prune, not scan+filter.
     REGISTRY["q_parquet_sink_partitioned"].fn(spark, SF001).collect()
-    from hadoop_log_analysis_spark.queries.sources_q import _derived_dir
+    from hadoop_log_analysis_spark.scratch import run_dir
 
-    back = spark.read.parquet(_derived_dir(SF001, "parquet_part")).filter(
+    app = spark.sparkContext.applicationId
+    back = spark.read.parquet(run_dir(app, "parquet_part", SF001)).filter(
         F.col("event_type") == "error"
     )
     plan = _formatted(back)
@@ -639,24 +640,22 @@ def test_pagerank_materializes_and_releases_iteration_caches(spark):
     assert jcache.isEmpty(), "pagerank left cached relations pinned"
 
 
-def test_dynamic_partition_pruning_through_dim_join(spark):
+def test_dynamic_partition_pruning_through_dim_join(spark, tmp_path):
     # Joining the event_type-partitioned sink against a selectively
     # filtered dim must inject a dynamicpruning subquery into the
     # fact scan's PartitionFilters — at 100 TB this is what turns a
     # full-corpus scan into reading only the dim-selected partitions.
-    import os
-
-    from hadoop_log_analysis_spark.queries.sources_q import _derived_dir
+    from hadoop_log_analysis_spark.scratch import run_dir
 
     REGISTRY["q_parquet_sink_partitioned"].fn(spark, SF001).collect()
-    fact = spark.read.parquet(_derived_dir(SF001, "parquet_part"))
-    dim_path = _derived_dir(SF001, "dpp_dim")
-    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
-        spark.createDataFrame(
-            [(t, int(t == "error")) for t in
-             ("error", "click", "view", "purchase", "signup")],
-            "event_type string, is_alert int",
-        ).write.mode("overwrite").parquet(dim_path)
+    app = spark.sparkContext.applicationId
+    fact = spark.read.parquet(run_dir(app, "parquet_part", SF001))
+    dim_path = str(tmp_path / "dpp_dim")
+    spark.createDataFrame(
+        [(t, int(t == "error")) for t in
+         ("error", "click", "view", "purchase", "signup")],
+        "event_type string, is_alert int",
+    ).write.parquet(dim_path)
     dim = spark.read.parquet(dim_path).filter(F.col("is_alert") == 1)
     j = fact.join(dim, "event_type").groupBy("event_type").count()
     plan = _formatted(j)

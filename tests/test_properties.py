@@ -200,15 +200,18 @@ def test_compaction_reduces_file_count_losslessly(spark):
     import os
 
     from hadoop_log_analysis_spark.queries import load_registry
-    from hadoop_log_analysis_spark.queries.sources_q import _derived_dir
+    from hadoop_log_analysis_spark.scratch import run_dir
 
     load_registry()["q_compact_small_files"].fn(spark, SF001).collect()
-    src = glob.glob(os.path.join(_derived_dir(SF001, "small_files"), "*.parquet"))
-    dst = glob.glob(os.path.join(_derived_dir(SF001, "compacted"), "*.parquet"))
+    app = spark.sparkContext.applicationId
+    src_dir = run_dir(app, "small_files", SF001)
+    dst_dir = run_dir(app, "compacted", SF001)
+    src = glob.glob(os.path.join(src_dir, "*.parquet"))
+    dst = glob.glob(os.path.join(dst_dir, "*.parquet"))
     assert len(src) == 64
     assert len(dst) < len(src) // 8
-    n_src = spark.read.parquet(_derived_dir(SF001, "small_files")).count()
-    n_dst = spark.read.parquet(_derived_dir(SF001, "compacted")).count()
+    n_src = spark.read.parquet(src_dir).count()
+    n_dst = spark.read.parquet(dst_dir).count()
     assert n_src == n_dst
 
 

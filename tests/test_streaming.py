@@ -90,7 +90,7 @@ def test_watermark_append_emits_closed_windows_matching_batch(spark):
         assert min(withheld) > max(emitted)
 
 
-def test_watermark_drops_late_row_exact_count(spark):
+def test_watermark_drops_late_row_exact_count(spark, tmp_path):
     """T4 late-DROP semantics pinned deterministically: a hand-built
     drop replays (on-time rows) -> (two watermark advances) -> (one
     late row behind the watermark). Spark 3.4+ filters late input with
@@ -101,16 +101,13 @@ def test_watermark_drops_late_row_exact_count(spark):
     withhold the still-open trailing windows."""
     import json
     import os
-    import shutil
 
     from hadoop_log_analysis_spark.streaming.events_stream import (
-        TMP,
         read_events_stream,
         run_drain,
     )
 
-    drop = os.path.join(TMP, "stream_drop_latecase")
-    shutil.rmtree(drop, ignore_errors=True)
+    drop = str(tmp_path / "stream_drop_latecase")
     os.makedirs(drop)
     base_us = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
     hour = 3_600_000_000
@@ -273,7 +270,7 @@ def test_grouped_first_seen_empty_group_emits_nothing():
     assert list(_grouped_first_seen_fn((0,), iter([]), _NoState())) == []
 
 
-def test_stream_knn_batch_boundary_invariant(spark):
+def test_stream_knn_batch_boundary_invariant(spark, tmp_path):
     """T8xL3 (streaming/retrieval.py): retrieval is stateless, so the
     drained top-k must be IDENTICAL under different microbatch widths
     — and each query's rows must form a complete 1..k rank prefix."""
@@ -283,15 +280,12 @@ def test_stream_knn_batch_boundary_invariant(spark):
         read_query_stream,
         stream_knn,
     )
-    import os
-
-    from hadoop_log_analysis_spark.streaming.events_stream import TMP
 
     corpus = _scan(spark, SF0001, "embeddings").select("vec_id", "embedding")
     drop = derive_query_drop_dir(spark, SF0001)
     results = {}
     for mfpt in (1, 4):
-        out_dir = os.path.join(TMP, f"test_knn_{mfpt}")
+        out_dir = str(tmp_path / f"test_knn_{mfpt}")
         df = stream_knn(
             read_query_stream(spark, drop, mfpt),
             corpus,
@@ -309,7 +303,7 @@ def test_stream_knn_batch_boundary_invariant(spark):
         assert sorted(rns) == list(range(1, len(rns) + 1)), q_id
 
 
-def test_stream_knn_ivf_matches_batch_ranker(spark):
+def test_stream_knn_ivf_matches_batch_ranker(spark, tmp_path):
     """T8xL4 (streaming/retrieval.py): the drained approximate stream
     must multiset-equal the batch ivf_topk_multi answer over the full
     query frame (same centroids, same routing) — replay adds nothing
@@ -326,9 +320,6 @@ def test_stream_knn_ivf_matches_batch_ranker(spark):
         read_query_stream,
         stream_knn,
     )
-    import os
-
-    from hadoop_log_analysis_spark.streaming.events_stream import TMP
 
     corpus = scan(spark, SF0001, "embeddings").select(
         "vec_id", "embedding", "label"
@@ -354,7 +345,7 @@ def test_stream_knn_ivf_matches_batch_ranker(spark):
             corpus,
             k=10,
             name="test_knn_ivf",
-            out_dir=os.path.join(TMP, "test_knn_ivf"),
+            out_dir=str(tmp_path / "test_knn_ivf"),
             ranker=lambda b: ivf_topk_multi(b, corpus, cents, k=10, n_probe=2),
         ).collect()
     }
@@ -370,7 +361,7 @@ def test_stream_knn_ivf_matches_batch_ranker(spark):
     assert recall >= 0.1, f"IVF stream recall {recall:.2f} below coverage floor"
 
 
-def test_stream_minhash_dedup_ttl_horizon(spark):
+def test_stream_minhash_dedup_ttl_horizon(spark, tmp_path):
     """TTL variant (docs_dedup._make_ttl_fn): winners suppress only
     within horizon_us of their own event time; later arrivals re-claim
     the bucket; and the EventTimeTimeout actually EVICTS — a late
@@ -379,16 +370,15 @@ def test_stream_minhash_dedup_ttl_horizon(spark):
     ran. Hand-built feed, identical text => all 16 bands collide."""
     import json
     import os
-    import shutil
 
+    from hadoop_log_analysis_spark.scratch import stamp_replay_order
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
         read_docs_stream,
         stream_minhash_dup_hits,
     )
     from hadoop_log_analysis_spark.streaming.events_stream import (
-        TMP,
+        ckpt_path,
         run_drain,
-        stamp_replay_order,
     )
 
     base = 1_704_067_200_000_000
@@ -423,8 +413,7 @@ def test_stream_minhash_dedup_ttl_horizon(spark):
         (16, 300 * mn, text_x),
         (17, 310 * mn, text_x),
     ]
-    drop = os.path.join(TMP, "docs_drop_ttlcase")
-    shutil.rmtree(drop, ignore_errors=True)
+    drop = str(tmp_path / "docs_drop_ttlcase")
     os.makedirs(drop)
     for i, (doc_id, off, text) in enumerate(files):
         with open(os.path.join(drop, f"part-{i:05d}.json"), "w") as f:
@@ -456,10 +445,7 @@ def test_stream_minhash_dedup_ttl_horizon(spark):
     # G batch, which carried no X data, so the timers fired), leaving
     # only E's and G's 16 buckets each, live because their expiries
     # exceed the final watermark.
-    import glob
-
-    app = spark.sparkContext.applicationId
-    ckpt = sorted(glob.glob(os.path.join(TMP, f"stream_ckpt_test_mh_ttl_{app}")))[-1]
+    ckpt = ckpt_path("test_mh_ttl", spark.sparkContext.applicationId)
     live = (
         spark.read.format("statestore")
         .load(ckpt)
@@ -598,12 +584,17 @@ def test_flattened_drop_mtimes_keep_answers(spark):
 
 
 def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
-    """Two inputs that share a basename must not share a cached drop
-    dir: the second one, holding half the events, replays half."""
+    """Two inputs that share a basename must not share a cached
+    directory: the second one, holding half the events and half the
+    embeddings, replays half the events, reads its own app-log text
+    files and probes its own IVF index."""
+    import glob
     import os
+    import shutil
 
     import pyarrow.parquet as pq
 
+    from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
     from hadoop_log_analysis_spark.streaming.events_stream import (
         DROP_SCHEMA,
         derive_drop_dir,
@@ -611,9 +602,16 @@ def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
 
     other = tmp_path / "other" / os.path.basename(SF0001)
     other.mkdir(parents=True)
-    events = pq.read_table(os.path.join(SF0001, "events.parquet"))
-    half = events.slice(0, events.num_rows // 2)
-    pq.write_table(half, str(other / "events.parquet"))
+    halves = {}
+    for name in os.listdir(SF0001):
+        table = name.removesuffix(".parquet")
+        if table in ("events", "embeddings"):
+            full = pq.read_table(os.path.join(SF0001, name))
+            halves[table] = full.slice(0, full.num_rows // 2)
+            assert halves[table].num_rows < full.num_rows
+            pq.write_table(halves[table], str(other / name))
+        else:
+            os.symlink(os.path.join(SF0001, name), other / name)
 
     first = derive_drop_dir(spark, SF0001)
     second = derive_drop_dir(spark, str(other))
@@ -623,4 +621,32 @@ def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
         with open(os.path.join(drop, "_READY")) as fh:
             assert fh.read() == os.path.realpath(src)
     n_second = spark.read.schema(DROP_SCHEMA).json(second).count()
-    assert n_second == half.num_rows < events.num_rows
+    assert n_second == halves["events"].num_rows
+
+    spec = REGISTRY["q_python_datasource"]
+    spec.fn(spark, SF0001).collect()
+    got = spec.fn(spark, str(other)).toPandas()
+    problems = compare_frames(got, run_oracle(spec.oracle, str(other)))
+    assert not problems, f"q_python_datasource on the second input: {problems}"
+
+    ann = REGISTRY["q_ann_ivf"].fn
+    ann(spark, SF0001).collect()
+    hits = {r.vec_id for r in ann(spark, str(other)).collect()}
+    assert hits <= set(halves["embeddings"].column("vec_id").to_pylist())
+
+    from hadoop_log_analysis_spark import scratch
+
+    indexes = {}
+    pattern = f"ivf_index_{os.path.basename(SF0001)}_*"
+    for entry in glob.glob(os.path.join(scratch.ROOT, pattern)):
+        with open(os.path.join(entry, "_READY")) as fh:
+            indexes[fh.read()] = entry
+    mine, theirs = os.path.realpath(SF0001), os.path.realpath(other)
+    assert mine in indexes and theirs in indexes
+    assert indexes[mine] != indexes[theirs]
+    for entry in glob.glob(os.path.join(scratch.ROOT, "*")):
+        marker = os.path.join(entry, "_READY")
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                if fh.read() == theirs:
+                    shutil.rmtree(entry)
