@@ -40,7 +40,6 @@ from functools import partial
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from hadoop_log_analysis_spark import scratch
 from hadoop_log_analysis_spark.queries import load_registry
 from hadoop_log_analysis_spark.session import get_spark
 from perfbench.tracing import StatusStore
@@ -304,11 +303,9 @@ def main(names: list[str]) -> None:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_LOCAL.json"), "w") as f:
         f.write(line + "\n")
-    app_id = spark.sparkContext.applicationId
     try:
         spark.stop()
     finally:
-        scratch.remove_run(app_id)
         sys.stdout.flush()
         print("\n" + compact, flush=True)
 

@@ -41,6 +41,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_log_analysis_spark.scratch import memo
+
 _MARK = "__asof_right_ts"
 _SRC = "__asof_is_left"
 _RTIE = "__asof_right_tie"
@@ -121,14 +123,6 @@ def asof_join(
 _BKT = "__asof_bkt"
 _TB = "__asof_tb"
 
-# Boundary-literal memo keyed by (session app id, analyzed-plan
-# semantic hash, n_buckets): exactness is split-invariant, so reusing
-# boundaries across repeated asof calls on the same input skips the
-# sample+approxQuantile driver action entirely (VERDICT r3 "Next
-# round" #8). _BOUNDS_MISSES counts actual boundary jobs for tests.
-_BOUNDS_CACHE: dict[tuple[str, int, int], list[float]] = {}
-_BOUNDS_MISSES = 0
-
 
 def _tie_break(unioned: DataFrame, ts_col: str, carry_cols: Sequence[str]):
     """Deterministic per-row tie-break hash over (ts, carried values):
@@ -157,7 +151,6 @@ def _keyless_carry(
 ) -> DataFrame:
     """Parallel last-non-null carry over a single global (ts, src,
     tie-break) order — module docstring's two-phase range-bucket plan."""
-    global _BOUNDS_MISSES
     spark = unioned.sparkSession
     n_buckets = n_buckets or spark.sparkContext.defaultParallelism
     tnum = F.col(ts_col).cast("double")
@@ -165,26 +158,23 @@ def _keyless_carry(
     # Driver-side boundary literals: exactness is split-invariant, so
     # the quantile approximation only balances load — which is why a
     # seeded 5% column-pruned sample suffices for the boundary job
-    # (the one extra action this plan runs, memoized per input plan).
-    # Dedupe (heavy ties collapse adjacent boundaries; constant ts
-    # degrades to 1 bucket = the old serial plan, which is then also
-    # the only correct one).
-    cache_key = (
-        spark.sparkContext.applicationId,
-        unioned._jdf.queryExecution().analyzed().semanticHash(),
-        n_buckets,
-    )
-    bounds = _BOUNDS_CACHE.get(cache_key)
-    if bounds is None:
-        _BOUNDS_MISSES += 1
+    # (the one extra action this plan runs). Memoized per application,
+    # analyzed-plan semantic hash and n_buckets, so repeated asof
+    # calls on the same input skip the job entirely (VERDICT r3 "Next
+    # round" #8). Dedupe (heavy ties collapse adjacent boundaries;
+    # constant ts degrades to 1 bucket = the old serial plan, which is
+    # then also the only correct one).
+    def probe() -> list[float]:
         probed = (
             unioned.select(tnum.alias("__asof_tnum"))
             .sample(fraction=0.05, seed=7)
         )
-        bounds = sorted(
+        return sorted(
             set(probed.stat.approxQuantile("__asof_tnum", probs, 0.01))
         )
-        _BOUNDS_CACHE[cache_key] = bounds
+
+    semantic = unioned._jdf.queryExecution().analyzed().semanticHash()
+    bounds = memo(spark, ("asof_bounds", semantic, n_buckets), probe)
     bucket = F.lit(0)
     for b in bounds:
         bucket = bucket + F.when(tnum >= F.lit(b), F.lit(1)).otherwise(F.lit(0))

@@ -609,9 +609,7 @@ def q_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     = dynamic partition overwrite of touched hours
     (q_incremental_overwrite is the template).
     """
-    hourly_path = run_dir(
-        spark.sparkContext.applicationId, "rollup_hourly", sf_dir
-    )
+    hourly_path = run_dir(spark, "rollup_hourly", sf_dir)
     hourly = (
         scan(spark, sf_dir, "events")
         .groupBy(

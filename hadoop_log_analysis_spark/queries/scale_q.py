@@ -11,6 +11,7 @@ are asserted in tests/test_plans.py.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 from hadoop_log_analysis_spark.functions import money, money_sum, rate
 from hadoop_log_analysis_spark.operators.skew import salted_agg, salted_join
 from hadoop_log_analysis_spark.queries import query
+from hadoop_log_analysis_spark.scratch import memo, run_dir
 from hadoop_log_analysis_spark.sources.catalog import scan
 
 
@@ -79,6 +81,36 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Names of the bucketed lineitem and orders tables of ``sf_dir``,
+    written once per application as external tables under its run
+    dirs (nothing lands in the session's warehouse). Each input gets
+    its own pair, so two inputs sharing a basename never share one."""
+
+    def write(table: str, kind: str, cols: tuple[str, str]) -> str:
+        path = run_dir(spark, kind, sf_dir)
+        name = re.sub(r"\W", "_", os.path.basename(path))
+        (
+            scan(spark, sf_dir, table)
+            .select(*cols)
+            .write.bucketBy(8, cols[0])
+            .sortBy(cols[0])
+            .mode("overwrite")
+            .option("path", path)
+            .saveAsTable(name)
+        )
+        return name
+
+    return memo(
+        spark,
+        ("bucketed_tables", sf_dir),
+        lambda: (
+            write("lineitem", "li_bkt", ("l_orderkey", "l_extendedprice")),
+            write("orders", "ord_bkt", ("o_orderkey", "o_orderpriority")),
+        ),
+    )
+
+
 @query(
     "q_bucketed_join",
     oracle="""
@@ -96,39 +128,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle (both sides pre-partitioned identically; the no-Exchange
     plan shape is asserted in tests/test_plans.py). At 100 TB this is
     the amortize-one-shuffle-forever pattern for recurring joins."""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    li_tbl, ord_tbl = f"li_bkt_{tag}", f"ord_bkt_{tag}"
-    catalog = spark.catalog
-
-    def _clear_stale(tbl: str) -> None:
-        # A fresh in-memory catalog + a leftover warehouse dir from a
-        # previous session -> LOCATION_ALREADY_EXISTS on saveAsTable.
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
-
-    if not catalog.tableExists(li_tbl):
-        _clear_stale(li_tbl)
-        (
-            scan(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice")
-            .write.bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .mode("overwrite")
-            .saveAsTable(li_tbl)
-        )
-    if not catalog.tableExists(ord_tbl):
-        _clear_stale(ord_tbl)
-        (
-            scan(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .mode("overwrite")
-            .saveAsTable(ord_tbl)
-        )
+    li_tbl, ord_tbl = bucketed_tables(spark, sf_dir)
     li = spark.table(li_tbl)
     orders = spark.table(ord_tbl)
     return (

@@ -57,7 +57,7 @@ def q_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to typed columns dropping the malformed, aggregate. The oracle
     computes the same aggregate from the original parquet — verifying
     the full text roundtrip + parse."""
-    path = run_dir(spark.sparkContext.applicationId, "textlog", sf_dir)
+    path = run_dir(spark, "textlog", sf_dir)
     write_app_log(spark, sf_dir, path)
     parsed = parse_app_log(read_text_logs(spark, path))
     return (
@@ -79,7 +79,7 @@ def q_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: CSV sink + header/schema CSV source roundtrip."""
-    path = run_dir(spark.sparkContext.applicationId, "csv", sf_dir)
+    path = run_dir(spark, "csv", sf_dir)
     orders = scan(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -111,7 +111,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: JSON-lines sink + source roundtrip."""
-    path = run_dir(spark.sparkContext.applicationId, "json", sf_dir)
+    path = run_dir(spark, "json", sf_dir)
     events = scan(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     events.coalesce(4).write.mode("overwrite").json(path)
     schema = T.StructType(
@@ -144,7 +144,7 @@ def q_parquet_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: event_type-partitioned parquet sink; the read-back filter on
     the partition column prunes to the error/ directory only (partition
     pruning is asserted in tests/test_plans.py)."""
-    path = run_dir(spark.sparkContext.applicationId, "parquet_part", sf_dir)
+    path = run_dir(spark, "parquet_part", sf_dir)
     events = scan(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -179,7 +179,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC shares parquet's scan features (pushdown, column pruning,
     vectorized reader) — at scale it's a drop-in layout choice.
     """
-    path = run_dir(spark.sparkContext.applicationId, "orc", sf_dir)
+    path = run_dir(spark, "orc", sf_dir)
     events = scan(spark, sf_dir, "events").drop("ts_ns")
     events.coalesce(4).write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
@@ -213,7 +213,7 @@ def q_incremental_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline repairs one day of a 100 TB date-partitioned table
     without touching the other 364.
     """
-    path = run_dir(spark.sparkContext.applicationId, "dyn_overwrite", sf_dir)
+    path = run_dir(spark, "dyn_overwrite", sf_dir)
     orders = scan(spark, sf_dir, "orders")
     stale = orders.withColumn(
         "o_totalprice",
@@ -268,9 +268,8 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
 
-    app = spark.sparkContext.applicationId
-    src = run_dir(app, "small_files", sf_dir)
-    dst = run_dir(app, "compacted", sf_dir)
+    src = run_dir(spark, "small_files", sf_dir)
+    dst = run_dir(spark, "compacted", sf_dir)
     target_bytes = 16 << 20
     ev = scan(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -312,7 +311,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference over XML is a full extra pass at 100 TB), aggregate,
     and hash-match the original table.
     """
-    path = run_dir(spark.sparkContext.applicationId, "xml", sf_dir)
+    path = run_dir(spark, "xml", sf_dir)
     orders = scan(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -373,7 +372,7 @@ def q_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB of third-party logs. Valid counts must equal the batch
     table; corrupt count must equal exactly the injected lines.
     """
-    path = run_dir(spark.sparkContext.applicationId, "json_malformed", sf_dir)
+    path = run_dir(spark, "json_malformed", sf_dir)
     events = scan(spark, sf_dir, "events").select("event_id", "event_type")
     events.write.mode("overwrite").json(path)
     with open(os.path.join(path, "zz-garbage.json"), "w") as fh:
@@ -495,7 +494,7 @@ def q_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_features,
     )
 
-    out_dir = run_dir(spark.sparkContext.applicationId, "binaryfiles", sf_dir)
+    out_dir = run_dir(spark, "binaryfiles", sf_dir)
     os.makedirs(out_dir, exist_ok=True)
     docs = scan(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     payloads = attach_synthetic_binary(docs).select(
@@ -585,7 +584,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep mergeSchema for the backfill jobs that actually need it.
     """
     cut = F.lit("2024-01-16").cast("timestamp")
-    out_dir = run_dir(spark.sparkContext.applicationId, "schema_evo", sf_dir)
+    out_dir = run_dir(spark, "schema_evo", sf_dir)
     ev = scan(spark, sf_dir, "events")
     (
         ev.filter(F.col("ts") < cut)
@@ -650,9 +649,8 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate straight off the events table — verifying that pruning
     changed I/O, not results.
     """
-    app = spark.sparkContext.applicationId
-    out_dir = run_dir(app, "dpp_events", sf_dir)
-    dim_dir = run_dir(app, "dpp_dates", sf_dir)
+    out_dir = run_dir(spark, "dpp_events", sf_dir)
+    dim_dir = run_dir(spark, "dpp_dates", sf_dir)
     ev = scan(spark, sf_dir, "events")
     (
         ev.select(
@@ -746,9 +744,8 @@ def q_wap_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    app = spark.sparkContext.applicationId
-    stage_dir = run_dir(app, "wap_stage", sf_dir)
-    pub_dir = run_dir(app, "wap_published", sf_dir)
+    stage_dir = run_dir(spark, "wap_stage", sf_dir)
+    pub_dir = run_dir(spark, "wap_published", sf_dir)
     cleaned = (
         scan(spark, sf_dir, "documents")
         .filter(F.col("n_chars") >= 100)
@@ -824,7 +821,7 @@ def q_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the join of [untouched partitions + rewritten partitions]
     proves the rewrite deleted exactly the cohort and nothing else.
     """
-    lake = run_dir(spark.sparkContext.applicationId, "gdpr_lake", sf_dir)
+    lake = run_dir(spark, "gdpr_lake", sf_dir)
     ev = scan(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value",
         (F.col("user_id") % 8).alias("u_bkt"),

@@ -353,7 +353,7 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     batchId overwrite), then read back and aggregated; must equal the
     batch table (SQL oracle)."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = run_dir(spark.sparkContext.applicationId, "stream_sink", sf_dir)
+    out_dir = run_dir(spark, "stream_sink", sf_dir)
     drop = derive_drop_dir(spark, sf_dir)
     events = read_events_stream(spark, drop)
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -536,10 +536,9 @@ def q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     drop = derive_drop_dir(spark, sf_dir)
     tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    stage = run_dir(app, "recovery_stage", sf_dir)
-    out = run_dir(app, "recovery_out", sf_dir)
-    ckpt = ckpt_path(f"recovery_{tag}", app)
+    stage = run_dir(spark, "recovery_stage", sf_dir)
+    out = run_dir(spark, "recovery_out", sf_dir)
+    ckpt = ckpt_path(spark, f"recovery_{tag}")
     for p in (stage, out, ckpt):
         shutil.rmtree(p, ignore_errors=True)
     os.makedirs(stage)
@@ -1055,9 +1054,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    state_root = run_dir(
-        spark.sparkContext.applicationId, "stream_cdc_state", sf_dir
-    )
+    state_root = run_dir(spark, "stream_cdc_state", sf_dir)
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root, exist_ok=True)
 
@@ -1461,7 +1458,7 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = run_dir(spark.sparkContext.applicationId, "stream_knn", sf_dir)
+    out_dir = run_dir(spark, "stream_knn", sf_dir)
     corpus = scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # Retrieval is stateless, so the result is batch-boundary invariant.
     r = REPLAY["knn"]
@@ -1511,9 +1508,7 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = run_dir(
-        spark.sparkContext.applicationId, "stream_knn_ivf", sf_dir
-    )
+    out_dir = run_dir(spark, "stream_knn_ivf", sf_dir)
     corpus = scan(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )

@@ -1,21 +1,27 @@
-"""The on-disk scratch layout: everything the package writes lives under
-``ROOT`` (``.tmp`` at the checkout root), and only this module knows how
-it is laid out. There are two ways to get a directory:
+"""What the package keeps for a Spark application, and where it writes.
+Everything the package writes lives under ``ROOT`` (``.tmp`` at the
+checkout root), and only this module knows how it is laid out; it is
+also the only module that reads a Spark application id. There are two
+ways to get a directory and one in-process cache:
 
 * :func:`cached` — an input derived once per input directory (replay
   drop dirs, app-log text files, the IVF index) and reused across runs,
   at ``ROOT/<kind>_<input basename>_<hash>``;
-* :func:`run_dir` — a directory owned by one Spark application, at
-  ``ROOT/<app_id>/...``, rewritten by its caller on every call;
-  :func:`remove_run` deletes everything the application wrote.
+* :func:`run_dir` — a directory owned by the session's application, at
+  ``ROOT/<app_id>/...``, rewritten by its caller on every call; the
+  first call for an application registers the removal of all of them
+  when the process exits, so no caller cleans up;
+* :func:`memo` — a value built once per application and kept in memory
+  (scans, collected driver-side results, bucketed tables).
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
-from typing import Callable
+from typing import Any, Callable, Hashable
 
 ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
@@ -76,13 +82,31 @@ def cached(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
     return path
 
 
-def run_dir(app_id: str, kind: str, sf_dir: str | None = None) -> str:
-    """Application ``app_id``'s directory ``kind``, one per input when
-    ``sf_dir`` is given. Touches nothing on disk."""
+# application ids whose run dirs are removed at process exit
+_RELEASED: set[str] = set()
+# one memo dict per application id
+_MEMO: dict[str, dict[Hashable, Any]] = {}
+
+
+def run_dir(spark: Any, kind: str, sf_dir: str | None = None) -> str:
+    """The session's application's directory ``kind``, one per input
+    when ``sf_dir`` is given. Touches nothing on disk; every run dir of
+    the application is removed when the process exits."""
+    app_id = spark.sparkContext.applicationId
+    if app_id not in _RELEASED:
+        _RELEASED.add(app_id)
+        # filesystem only: at exit the JVM may already be gone
+        atexit.register(
+            shutil.rmtree, os.path.join(ROOT, app_id), ignore_errors=True
+        )
     name = kind if sf_dir is None else _entry(kind, sf_dir)
     return os.path.join(ROOT, app_id, name)
 
 
-def remove_run(app_id: str) -> None:
-    """Delete every :func:`run_dir` of application ``app_id``."""
-    shutil.rmtree(os.path.join(ROOT, app_id), ignore_errors=True)
+def memo(spark: Any, key: Hashable, build: Callable[[], Any]) -> Any:
+    """The value ``build()`` returns, built once per application and
+    ``key``."""
+    values = _MEMO.setdefault(spark.sparkContext.applicationId, {})
+    if key not in values:
+        values[key] = build()
+    return values[key]

@@ -50,18 +50,16 @@ def configure_session(spark: SparkSession) -> SparkSession:
 
 def get_spark(
     app_name: str = "hadoop-log-analysis-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build a session for local runs (tests / bench).
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
-    ``local[*]``). ``shuffle_partitions`` defaults to the core count —
-    at fixture scale AQE coalesces below it anyway.
+    The master is ``local[$SPARK_GRAFT_CPUS]`` (fallback ``local[*]``).
+    ``shuffle_partitions`` defaults to the core count — at fixture
+    scale AQE coalesces below it anyway.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if master is None:
-        master = f"local[{cpus}]" if cpus else "local[*]"
+    master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus else 32
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_log_analysis_spark import schemas
+from hadoop_log_analysis_spark.scratch import memo
 from hadoop_log_analysis_spark.session import configure_session
 
 TABLES: tuple[str, ...] = (
@@ -81,25 +82,22 @@ def _repair_events(df: DataFrame) -> DataFrame:
     )
 
 
-# DataFrame-lineage memo keyed by (session app id, sf_dir, table).
-# A DataFrame is an immutable logical plan, so reusing one across
-# queries is safe; it skips the per-call parquet footer/schema read
-# and schema assertion (~0.1-0.2 s each) — with 153 registry queries
-# x 1-3 scans apiece that is most of the driver-verify fixed cost.
-# Catalyst still re-optimizes per query, so pushdown/pruning plans
-# are identical to a fresh read.
-_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# Memoized per (application, sf_dir, table). A DataFrame is an
+# immutable logical plan, so reusing one across queries is safe; it
+# skips the per-call parquet footer/schema read and schema assertion
+# (~0.1-0.2 s each) — with 153 registry queries x 1-3 scans apiece
+# that is most of the driver-verify fixed cost. Catalyst still
+# re-optimizes per query, so pushdown/pruning plans are identical to
+# a fresh read.
 def scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Schema-asserted scan of one curated table under ``sf_dir``."""
     if table not in TABLES:
         raise ValueError(f"unknown table {table!r}; expected one of {TABLES}")
     configure_session(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo(spark, ("scan", sf_dir, table), lambda: _read(spark, sf_dir, table))
+
+
+def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if table == "events":
         df = _repair_events(df)
@@ -110,7 +108,6 @@ def scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         raise RuntimeError(
             f"schema drift for {table}: expected {expected_fields}, got {actual_fields}"
         )
-    _SCAN_CACHE[key] = df
     return df
 
 

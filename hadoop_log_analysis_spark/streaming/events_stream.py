@@ -161,13 +161,13 @@ def read_events_stream(
     )
 
 
-def ckpt_path(name: str, app_id: str) -> str:
+def ckpt_path(spark: SparkSession, name: str) -> str:
     """The checkpoint directory :func:`run_drain` uses for a given
-    stream name and Spark application id. Shared so measurement tooling
+    stream name in the session's application. Shared so measurement tooling
     (scripts/stream_state_skew.py) derives the SAME path instead of
     hard-coding the convention — a rename there must break loudly,
     not silently profile an empty directory."""
-    return run_dir(app_id, f"stream_ckpt_{name}")
+    return run_dir(spark, f"stream_ckpt_{name}")
 
 
 def run_drain(
@@ -206,7 +206,7 @@ def run_drain(
     """
     spark = sdf.sparkSession
     if checkpoint is None:
-        checkpoint = ckpt_path(name, spark.sparkContext.applicationId)
+        checkpoint = ckpt_path(spark, name)
         shutil.rmtree(checkpoint, ignore_errors=True)
     writer = sdf.writeStream.queryName(name).outputMode(output_mode)
     if foreach_batch is None:

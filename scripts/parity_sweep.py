@@ -44,7 +44,6 @@ from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from hadoop_log_analysis_spark import scratch  # noqa: E402
 from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle  # noqa: E402
 from hadoop_log_analysis_spark.sources.catalog import scan  # noqa: E402
 
@@ -160,9 +159,7 @@ def main() -> int:
             # probe over the full registry) still records its coverage
             print(f"ok {name}: {len(spdf)}", flush=True)
     print(f"DONE: {bad} mismatches over {len(todo)} queries")
-    app_id = spark.sparkContext.applicationId
     spark.stop()
-    scratch.remove_run(app_id)
     return 1 if bad else 0
 
 

@@ -55,11 +55,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from hadoop_log_analysis_spark.scratch import (
-        remove_run,
-        run_dir,
-        stamp_replay_order,
-    )
+    from hadoop_log_analysis_spark.scratch import run_dir, stamp_replay_order
     from hadoop_log_analysis_spark.session import get_spark
     from hadoop_log_analysis_spark.sources.catalog import scan
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
@@ -84,7 +80,6 @@ def main() -> int:
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-    app = spark.sparkContext.applicationId
     # allow 600 s per drain, double the default
     events_stream.DRAIN_TIMEOUT_S = 600
 
@@ -107,7 +102,7 @@ def main() -> int:
     for fname, fdf in feeds.items():
         # probe-specific drop dir (same replay scheme as
         # docs_dedup.derive_docs_drop_dir, built from the variant df)
-        drop = run_dir(app, f"docs_drop_probe_{fname}", args.sf_dir)
+        drop = run_dir(spark, f"docs_drop_probe_{fname}", args.sf_dir)
         shutil.rmtree(drop, ignore_errors=True)
         (
             fdf.select(
@@ -130,7 +125,7 @@ def main() -> int:
         out = run_drain(hits, table, "append")
         n_hits = out.count()
         n_suppressed = out.select("doc_id").distinct().count()
-        ckpt = ckpt_path(table, app)
+        ckpt = ckpt_path(spark, table)
         prof = state_profile(ckpt)
         assert prof, f"no state under {ckpt}; ckpt convention desynced"
         rows = {}
@@ -158,7 +153,6 @@ def main() -> int:
         json.dump(result, f, indent=1)
     print("WROTE", args.out, flush=True)
     spark.stop()
-    remove_run(app)
     return 0
 
 

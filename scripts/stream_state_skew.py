@@ -99,7 +99,6 @@ def main() -> int:
         T8_LEFT_TABLE,
     )
     from hadoop_log_analysis_spark.session import get_spark
-    from hadoop_log_analysis_spark.scratch import remove_run
     from hadoop_log_analysis_spark.streaming.events_stream import ckpt_path
 
     spark = get_spark(app_name="hla-stream-state-skew")
@@ -114,7 +113,6 @@ def main() -> int:
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-    app = spark.sparkContext.applicationId
     reg = load_registry()
     if args.bucket_seconds is not None:
         streaming_q.T8_BUCKET_SECONDS = args.bucket_seconds
@@ -142,7 +140,7 @@ def main() -> int:
         result[label] = {}
         for vname, (qname, table) in variants.items():
             n = reg[qname].fn(spark, sf_dir).count()
-            ckpt = ckpt_path(table, app)
+            ckpt = ckpt_path(spark, table)
             prof = state_profile(ckpt)
             # ADVICE r12: an empty profile means the ckpt convention
             # drifted — fail loudly, never record a hollow measurement
@@ -168,7 +166,7 @@ def main() -> int:
             result[label][vname] = row
             print(f"{label}/{vname}: rows={n} " + json.dumps(rows), flush=True)
             # fresh checkpoint per dir: the drain keys the ckpt on the
-            # app id, so clear it between dirs or the next drain no-ops
+            # stream name only, so clear it between dirs
             import shutil
             shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -176,7 +174,6 @@ def main() -> int:
         json.dump(result, f, indent=1)
     print("WROTE", args.out, flush=True)
     spark.stop()
-    remove_run(app)
     return 0
 
 

@@ -4,7 +4,6 @@ import os
 
 import pytest
 
-from hadoop_log_analysis_spark import scratch
 from hadoop_log_analysis_spark.session import get_spark
 
 SF0001 = "/root/testdata/sf0.001"
@@ -19,5 +18,4 @@ PARITY_SF = os.environ.get("HLA_PARITY_SF", SF001)
 def spark():
     s = get_spark(app_name="hla-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
-    yield s
-    scratch.remove_run(s.sparkContext.applicationId)
+    return s

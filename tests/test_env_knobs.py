@@ -2,11 +2,18 @@
 cadences, state partitions, widths and timeouts are module constants
 (streaming_q.REPLAY and friends). Only the deployment settings in
 session.py may come from the environment. Likewise only scratch.py
-names a place on disk to write to."""
+names a place on disk to write to, and only scratch.py reads a Spark
+application id: it keys everything an application keeps and removes
+the application's run dirs when the process exits."""
 
 from __future__ import annotations
 
 import ast
+import os
+import shutil
+import subprocess
+import sys
+import uuid
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "hadoop_log_analysis_spark"
@@ -92,3 +99,42 @@ def test_only_scratch_names_the_scratch_root():
             if ".tmp" in text or "/root/" in text:
                 bad.append(f"{path.relative_to(PKG.parent)}:{line}: {text!r}")
     assert not bad, "scratch paths outside scratch.py:\n" + "\n".join(bad)
+
+
+def test_only_scratch_reads_the_application_id():
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == PKG / "scratch.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+                bad.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+    assert not bad, "application id read outside scratch.py:\n" + "\n".join(bad)
+
+
+def test_run_dirs_removed_at_exit():
+    """A process that made a run dir leaves nothing under the scratch
+    root once it exits; a stub session stands in for Spark, so no JVM
+    starts."""
+    from hadoop_log_analysis_spark import scratch
+
+    app_id = f"stub-{uuid.uuid4().hex}"
+    child = f"""
+import os, types
+from hadoop_log_analysis_spark import scratch
+sc = types.SimpleNamespace(applicationId={app_id!r})
+path = scratch.run_dir(types.SimpleNamespace(sparkContext=sc), "probe")
+os.makedirs(path)
+open(os.path.join(path, "part-0"), "w").close()
+print(path)
+"""
+    app_root = os.path.join(scratch.ROOT, app_id)
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", child],
+            cwd=PKG.parent, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        assert out.startswith(app_root + os.sep)
+        assert not os.path.exists(app_root), f"{app_root} left after exit"
+    finally:
+        shutil.rmtree(app_root, ignore_errors=True)

@@ -316,14 +316,20 @@ def test_asof_quantile_bounds_cached_per_input(spark):
     right = spark.range(50).select(
         (F.col("id") * 29).alias("tus"), (F.col("id") * 1.5).alias("pay")
     )
-    before = J._BOUNDS_MISSES
-    first = J.asof_join(left, right, ts_col="tus", payload=["pay"]).count()
-    mid = J._BOUNDS_MISSES
-    second = J.asof_join(left, right, ts_col="tus", payload=["pay"]).count()
-    after = J._BOUNDS_MISSES
-    assert first == second
-    assert mid == before + 1
-    assert after == mid  # second call: cache hit, no boundary job
+    sc = spark.sparkContext
+    jobs, counts = [], []
+    for call in ("first", "second"):
+        group = f"asof-bounds-{call}"
+        sc.setJobGroup(group, "asof_join build")
+        try:
+            built = J.asof_join(left, right, ts_col="tus", payload=["pay"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(sc.statusTracker().getJobIdsForGroup(group))
+        counts.append(built.count())
+    assert counts[0] == counts[1]
+    assert jobs[0], "the first build ran no boundary job"
+    assert jobs[1] == [], "the second build ran a job: the memo missed"
 
 
 def test_keyless_asof_right_ts_ties_consistent(spark):

@@ -58,8 +58,7 @@ def test_partition_pruning_on_partitioned_sink(spark):
     REGISTRY["q_parquet_sink_partitioned"].fn(spark, SF001).collect()
     from hadoop_log_analysis_spark.scratch import run_dir
 
-    app = spark.sparkContext.applicationId
-    back = spark.read.parquet(run_dir(app, "parquet_part", SF001)).filter(
+    back = spark.read.parquet(run_dir(spark, "parquet_part", SF001)).filter(
         F.col("event_type") == "error"
     )
     plan = _formatted(back)
@@ -382,8 +381,9 @@ def test_cbo_stats_hold_and_bucketed_join_plan_stable(spark):
     # VERDICT r1 item 8: with table/column stats ANALYZEd and CBO on,
     # the bucketed join must keep the same shuffle-free SMJ shape —
     # stats improve estimates without destabilizing the plan.
-    REGISTRY["q_bucketed_join"].fn(spark, SF001).collect()  # ensure tables
-    li_tbl, ord_tbl = "li_bkt_sf0_01", "ord_bkt_sf0_01"
+    from hadoop_log_analysis_spark.queries.scale_q import bucketed_tables
+
+    li_tbl, ord_tbl = bucketed_tables(spark, SF001)
     spark.sql(f"ANALYZE TABLE {li_tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
     spark.sql(f"ANALYZE TABLE {ord_tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
     stats_row = (
@@ -648,8 +648,7 @@ def test_dynamic_partition_pruning_through_dim_join(spark, tmp_path):
     from hadoop_log_analysis_spark.scratch import run_dir
 
     REGISTRY["q_parquet_sink_partitioned"].fn(spark, SF001).collect()
-    app = spark.sparkContext.applicationId
-    fact = spark.read.parquet(run_dir(app, "parquet_part", SF001))
+    fact = spark.read.parquet(run_dir(spark, "parquet_part", SF001))
     dim_path = str(tmp_path / "dpp_dim")
     spark.createDataFrame(
         [(t, int(t == "error")) for t in

@@ -203,9 +203,8 @@ def test_compaction_reduces_file_count_losslessly(spark):
     from hadoop_log_analysis_spark.scratch import run_dir
 
     load_registry()["q_compact_small_files"].fn(spark, SF001).collect()
-    app = spark.sparkContext.applicationId
-    src_dir = run_dir(app, "small_files", SF001)
-    dst_dir = run_dir(app, "compacted", SF001)
+    src_dir = run_dir(spark, "small_files", SF001)
+    dst_dir = run_dir(spark, "compacted", SF001)
     src = glob.glob(os.path.join(src_dir, "*.parquet"))
     dst = glob.glob(os.path.join(dst_dir, "*.parquet"))
     assert len(src) == 64

@@ -445,7 +445,7 @@ def test_stream_minhash_dedup_ttl_horizon(spark, tmp_path):
     # G batch, which carried no X data, so the timers fired), leaving
     # only E's and G's 16 buckets each, live because their expiries
     # exceed the final watermark.
-    ckpt = ckpt_path("test_mh_ttl", spark.sparkContext.applicationId)
+    ckpt = ckpt_path(spark, "test_mh_ttl")
     live = (
         spark.read.format("statestore")
         .load(ckpt)
@@ -585,9 +585,10 @@ def test_flattened_drop_mtimes_keep_answers(spark):
 
 def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
     """Two inputs that share a basename must not share a cached
-    directory: the second one, holding half the events and half the
-    embeddings, replays half the events, reads its own app-log text
-    files and probes its own IVF index."""
+    directory or table: the second one, holding half the events, half
+    the embeddings and half the lineitem rows, replays half the events,
+    reads its own app-log text files, probes its own IVF index and
+    joins its own bucketed tables."""
     import glob
     import os
     import shutil
@@ -605,7 +606,7 @@ def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
     halves = {}
     for name in os.listdir(SF0001):
         table = name.removesuffix(".parquet")
-        if table in ("events", "embeddings"):
+        if table in ("events", "embeddings", "lineitem"):
             full = pq.read_table(os.path.join(SF0001, name))
             halves[table] = full.slice(0, full.num_rows // 2)
             assert halves[table].num_rows < full.num_rows
@@ -623,11 +624,12 @@ def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
     n_second = spark.read.schema(DROP_SCHEMA).json(second).count()
     assert n_second == halves["events"].num_rows
 
-    spec = REGISTRY["q_python_datasource"]
-    spec.fn(spark, SF0001).collect()
-    got = spec.fn(spark, str(other)).toPandas()
-    problems = compare_frames(got, run_oracle(spec.oracle, str(other)))
-    assert not problems, f"q_python_datasource on the second input: {problems}"
+    for name in ("q_python_datasource", "q_bucketed_join"):
+        spec = REGISTRY[name]
+        spec.fn(spark, SF0001).collect()
+        got = spec.fn(spark, str(other)).toPandas()
+        problems = compare_frames(got, run_oracle(spec.oracle, str(other)))
+        assert not problems, f"{name} on the second input: {problems}"
 
     ann = REGISTRY["q_ann_ivf"].fn
     ann(spark, SF0001).collect()
