@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,10 +29,17 @@ from hadoop_log_analysis_spark.queries import query
 from hadoop_log_analysis_spark.scratch import run_dir
 from hadoop_log_analysis_spark.sources.catalog import scan
 from hadoop_log_analysis_spark.streaming.events_stream import (
+    DOCS,
+    EVENTS,
+    EVENTS_WITH_DUPS,
+    EVENTS_WITH_SENTINELS,
+    QUERY_VECTORS,
+    Replay,
     ckpt_path,
-    derive_drop_dir,
-    read_events_stream,
+    feed_stream,
+    read_feed,
     run_drain,
+    write_feed,
 )
 from hadoop_log_analysis_spark.streaming.skew import (
     bucketed_interval_join,
@@ -62,22 +68,13 @@ T8_INTERVAL_SECONDS = 3600
 T8_BUCKET_SECONDS = 4 * T8_INTERVAL_SECONDS
 
 
-@dataclass(frozen=True)
-class Replay:
-    """How a query family replays its drop dir: ``files`` time-ordered
-    drop files, ``mfpt`` of them per microbatch (maxFilesPerTrigger),
-    and ``state_partitions`` state-store tasks for the drain."""
-
-    files: int
-    mfpt: int
-    state_partitions: int = 8
-
-
-# Replay cadence per query family, read at call time. Every drained
-# answer below is a pure function of the replayed data, not of how it
-# is batched (each query says why). The oracle parity tests pin every
-# entry; tests/test_streaming.py also pins most families at a folded
-# 2-file / mFPT=3 replay.
+# Replay cadence per query family, read at call time: every drop-fed
+# query names its family once and takes both its feed
+# (events_stream.feed_stream) and its drain's state partitions from
+# the entry. Every drained answer below is a pure function of the
+# replayed data, not of how it is batched (each query says why). The
+# oracle parity tests pin every entry; tests/test_streaming.py also
+# pins most families at a folded 2-file / mFPT=3 replay.
 REPLAY: dict[str, Replay] = {
     # complete-mode aggregations without a watermark: hourly_errors,
     # sliding_counts, sessions, ohlc
@@ -95,6 +92,14 @@ REPLAY: dict[str, Replay] = {
     "minhash_dedup": Replay(8, 1, 16),
     # stateless retrieval over a 4-file query feed (q_stream_knn pair)
     "knn": Replay(4, 1),
+    # mFPT=1: the watermark advances one time slice per batch
+    "watermark_late": Replay(8, 1),
+    "sink_parquet": Replay(8, 2),
+    # foreachBatch drains whose batches run their own batch jobs: the
+    # session's shuffle partitions stay as they are
+    "recovery": Replay(8, 1, None),
+    "static_join": Replay(8, 2),
+    "cdc_apply": Replay(8, 2, None),
 }
 
 # q_stream_minhash_dedup's bucket groups per band (G): one Python call
@@ -121,8 +126,7 @@ def q_stream_hourly_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7+T1: tumbling 1-hour window over the error stream, complete
     mode (all windows retained -> deterministic == batch answer)."""
     r = REPLAY["complete"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     agg = (
         events.filter(F.col("event_type") == "error")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -151,8 +155,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete mode. Each event lands in 4 overlapping windows; the
     oracle enumerates the same 4 window starts per event."""
     r = REPLAY["complete"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     agg = (
         events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
@@ -192,8 +195,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch formulation (lag -> break -> running sum -> agg). Spark's
     session_window end = last event + gap, mirrored as +1800000000 µs."""
     r = REPLAY["complete"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     agg = (
         events.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -223,14 +225,16 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity with batch plus exact late-drop accounting are pinned by
     tests/test_streaming.py (every emitted window carries the exact
     batch count; a deterministic hand-built late row is dropped)."""
-    drop = derive_drop_dir(spark, sf_dir)
-    events = read_events_stream(spark, drop, max_files_per_trigger=1)
+    r = REPLAY["watermark_late"]
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     agg = (
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_drain(agg, "t4_watermark", "append")
+    out = run_drain(
+        agg, "t4_watermark", "append", shuffle_partitions=r.state_partitions
+    )
     return out.select(_us(F.col("w.start")).alias("hr_us"), "n").orderBy("hr_us")
 
 
@@ -256,8 +260,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark advance LESS between original and duplicate, and deduped
     rows append in their own batch."""
     r = REPLAY["dedup"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_dups=True)
-    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    events = feed_stream(spark, sf_dir, EVENTS_WITH_DUPS, r)
     deduped = events.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -318,8 +321,7 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     r = REPLAY["stateful"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     updates = events.groupBy("user_id").applyInPandasWithState(
         _count_state_fn,
         outputStructType=_T6_OUT_SCHEMA,
@@ -354,8 +356,8 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch table (SQL oracle)."""
     tag = os.path.basename(os.path.normpath(sf_dir))
     out_dir = run_dir(spark, "stream_sink", sf_dir)
-    drop = derive_drop_dir(spark, sf_dir)
-    events = read_events_stream(spark, drop)
+    r = REPLAY["sink_parquet"]
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -363,7 +365,10 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    run_drain(events, f"t7_sink_{tag}", foreach_batch=write_batch)
+    run_drain(
+        events, f"t7_sink_{tag}", foreach_batch=write_batch,
+        shuffle_partitions=r.state_partitions,
+    )
     # explicit schema (stream schema + the batch_id partition dir):
     # a drained stream with zero batches reads back as empty, not as
     # an inference failure — quiet days are normal at scale.
@@ -400,17 +405,16 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Watermarks on BOTH sides + the time-range join condition let Spark
     bound join state: a buffered click is evicted once the watermark
     passes click.ts + 1 h (no purchase can match it anymore). The
-    in-order replay (derive_drop_dir stamps file mtimes in ts order)
-    advances the watermark monotonically, so the availableNow drain
-    emits exactly the batch join's matches — a full-hash oracle, the
-    strongest check a streaming op can carry. Inner joins need no
+    in-order replay (events_stream.write_feed lays files out in ts
+    order) advances the watermark monotonically, so the availableNow
+    drain emits exactly the batch join's matches — a full-hash oracle,
+    the strongest check a streaming op can carry. Inner joins need no
     sentinel flush (a match emits once both rows are present), so any
     replay cadence gives the same answer.
     """
     r = REPLAY["inner_join"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS, r)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "2 hours")
         .select(
@@ -420,7 +424,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS, r)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "2 hours")
         .select(
@@ -472,9 +476,8 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     end. Oracle byte-identical to q_stream_stream_join's (output-
     invisibility, driver-hash-enforced)."""
     r = REPLAY["inner_join"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS, r)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -483,7 +486,7 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS, r)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -534,7 +537,8 @@ def q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
 
-    drop = derive_drop_dir(spark, sf_dir)
+    r = REPLAY["recovery"]
+    drop = write_feed(spark, sf_dir, EVENTS, r)
     tag = os.path.basename(os.path.normpath(sf_dir))
     stage = run_dir(spark, "recovery_stage", sf_dir)
     out = run_dir(spark, "recovery_out", sf_dir)
@@ -553,11 +557,11 @@ def q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def drain_once() -> None:
         run_drain(
-            read_events_stream(spark, stage, max_files_per_trigger=1),
+            read_feed(spark, stage, EVENTS, r),
             f"recovery_{tag}",
             foreach_batch=write_batch,
             checkpoint=ckpt,
-            shuffle_partitions=None,
+            shuffle_partitions=r.state_partitions,
         )
 
     half = len(files) // 2
@@ -599,18 +603,21 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stream-batch parity: the drained result must hash-match the batch
     join+aggregate (full DuckDB oracle).
     """
-    drop = derive_drop_dir(spark, sf_dir)
+    r = REPLAY["static_join"]
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     static_avg = (
         scan(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.avg("value").alias("av"))
     )
-    events = read_events_stream(spark, drop)
     joined = events.join(F.broadcast(static_avg), "event_type").filter(
         F.col("value") > F.col("av")
     )
     counts = joined.groupBy("event_type").agg(F.count("*").alias("n_above"))
-    out = run_drain(counts, "t8_stream_static", "complete")
+    out = run_drain(
+        counts, "t8_stream_static", "complete",
+        shuffle_partitions=r.state_partitions,
+    )
     return out.orderBy("event_type")
 
 
@@ -635,14 +642,14 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The hard part of a streaming OUTER join is COMPLETENESS: unmatched
     rows sit in state until the watermark passes their eviction time,
     and a bounded replay ends with the watermark at max_ts - delay, so
-    the last rows would never flush. The drop directory therefore
-    carries final watermark-pusher sentinels (+30/+60 days, see
-    derive_drop_dir). Subtlety: Catalyst pushes a plain event_type
-    filter BELOW the EventTimeWatermark node, so a filtered-out
-    sentinel would never reach the watermark tracker — instead each
-    side's filter ADMITS the sentinel rows (user_id = -1 can never
-    match a real row). The sentinel strip (``click_id >= 0``) runs on
-    the DRAINED batch table, NOT inside the streaming plan: as a
+    the last rows would never flush. The feed therefore carries final
+    watermark-pusher sentinels (+30/+60/+90 days, see
+    events_stream.EVENTS_WITH_SENTINELS). Subtlety: Catalyst pushes a
+    plain event_type filter BELOW the EventTimeWatermark node, so a
+    filtered-out sentinel would never reach the watermark tracker —
+    instead each side's filter ADMITS the sentinel rows (user_id = -1
+    can never match a real row). The sentinel strip (``click_id >= 0``)
+    runs on the DRAINED batch table, NOT inside the streaming plan: as a
     left-side predicate of a left-outer join it would be pushed below
     the join and through the clicks-side watermark node, hiding the
     sentinel from exactly the tracker it exists to advance (observed:
@@ -659,9 +666,8 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final data batch, so the flush batch is still guaranteed.
     """
     r = REPLAY["left_join"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS_WITH_SENTINELS, r)
         .withWatermark("ts", "2 hours")
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
@@ -671,7 +677,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS_WITH_SENTINELS, r)
         .withWatermark("ts", "2 hours")
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
@@ -737,9 +743,8 @@ def q_stream_stream_left_join_bucketed(
     measured by scripts/stream_state_skew.py (plain vs bucketed).
     """
     r = REPLAY["left_join"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS_WITH_SENTINELS, r)
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
             F.col("event_id").alias("click_id"),
@@ -748,7 +753,7 @@ def q_stream_stream_left_join_bucketed(
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS_WITH_SENTINELS, r)
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -806,9 +811,8 @@ def q_stream_stream_left_join_bucketed_payload(
     ``test_merge_bucketed_left_carries_payload_cols``). Time crosses
     the engine boundary as epoch-µs (module docstring)."""
     r = REPLAY["left_join"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS_WITH_SENTINELS, r)
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
             F.col("event_id").alias("click_id"),
@@ -817,7 +821,7 @@ def q_stream_stream_left_join_bucketed_payload(
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS_WITH_SENTINELS, r)
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -930,8 +934,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     batching.
     """
     r = REPLAY["heavy_hitters"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    ev = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    ev = feed_stream(spark, sf_dir, EVENTS, r)
     sharded = ev.select(
         F.col("event_type").alias("item"),
         F.pmod(F.xxhash64("event_type"), F.lit(8)).alias("shard"),
@@ -1000,8 +1003,11 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact count(DISTINCT) is unsupported inside a streaming agg;
     # drain the typed rows append-mode and aggregate exactly on the
     # drained batch — the streaming-transport / batch-finishing split
-    # the foreachBatch sink queries also use.
-    typed = run_drain(stream, "t_stream_pysrc", "append")
+    # the foreachBatch sink queries also use. Not a replay feed, and
+    # the stateless drain has no shuffle to size.
+    typed = run_drain(
+        stream, "t_stream_pysrc", "append", shuffle_partitions=None
+    )
     return (
         typed.groupBy("event_type")
         .agg(
@@ -1058,8 +1064,8 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root, exist_ok=True)
 
-    drop = derive_drop_dir(spark, sf_dir)
-    events = read_events_stream(spark, drop)
+    r = REPLAY["cdc_apply"]
+    events = feed_stream(spark, sf_dir, EVENTS, r)
 
     def _latest_versions() -> list[str]:
         vs = _glob.glob(os.path.join(state_root, "v=*"))
@@ -1107,7 +1113,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     run_drain(
         stream, f"cdc_apply_{tag}", foreach_batch=apply_batch,
-        shuffle_partitions=None,
+        shuffle_partitions=r.state_partitions,
     )
 
     versions = _latest_versions()
@@ -1161,15 +1167,14 @@ def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Complete-mode agg with no watermark: the drained result is
     # batching-invariant.
     r = REPLAY["psi_monitor"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    ev = scan(spark, sf_dir, "events")
-    b = _psi_reference(ev).localCheckpoint(eager=True)  # snapshot once
     cut = F.lit(_PSI_CUT).cast("timestamp")
     stream = (
-        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        feed_stream(spark, sf_dir, EVENTS, r)
         .filter(F.col("ts") >= cut)
         .select("event_type", "value")
     )
+    ev = scan(spark, sf_dir, "events")
+    b = _psi_reference(ev).localCheckpoint(eager=True)  # snapshot once
     cb = run_drain(
         _psi_binned(stream, b), "psi_monitor", "complete",
         shuffle_partitions=r.state_partitions,
@@ -1263,8 +1268,7 @@ def q_stream_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same under any batching of the time-ordered files, and the
     # per-user max of emissions is its final value (see above).
     r = REPLAY["stateful"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    ev = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    ev = feed_stream(spark, sf_dir, EVENTS, r)
     updates = ev.groupBy("user_id").applyInPandasWithState(
         _seq_state_fn,
         outputStructType=_SEQ_OUT_SCHEMA,
@@ -1325,8 +1329,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     < 2^63).
     """
     r = REPLAY["complete"]
-    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+    events = feed_stream(spark, sf_dir, EVENTS, r)
     k = subus_key(F.unix_micros(F.col("ts")))
     agg = (
         events.filter(F.col("event_type") == "purchase")
@@ -1383,8 +1386,6 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     simulation's keepers.
     """
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
-        derive_docs_drop_dir,
-        read_docs_stream,
         stream_minhash_dup_hits,
     )
 
@@ -1396,9 +1397,8 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelizes with task count. The drained result is invariant
     # under replay cadence, G and partition count.
     r = REPLAY["minhash_dedup"]
-    drop = derive_docs_drop_dir(spark, sf_dir, n_files=r.files)
     hits = stream_minhash_dup_hits(
-        read_docs_stream(spark, drop, r.mfpt),
+        feed_stream(spark, sf_dir, DOCS, r),
         groups_per_band=MINHASH_GROUPS_PER_BAND,
     )
     out = run_drain(
@@ -1451,20 +1451,15 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the corpus outgrows broadcast). Full DuckDB oracle — the
     drained stream must hash-match the batch SQL answer, the same
     double-dot-product exactness contract as the batch L3 tier."""
-    from hadoop_log_analysis_spark.streaming.retrieval import (
-        derive_query_drop_dir,
-        read_query_stream,
-        stream_knn,
-    )
+    from hadoop_log_analysis_spark.streaming.retrieval import stream_knn
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     out_dir = run_dir(spark, "stream_knn", sf_dir)
     corpus = scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # Retrieval is stateless, so the result is batch-boundary invariant.
     r = REPLAY["knn"]
-    drop = derive_query_drop_dir(spark, sf_dir, n_files=r.files)
     result = stream_knn(
-        read_query_stream(spark, drop, r.mfpt),
+        feed_stream(spark, sf_dir, QUERY_VECTORS, r),
         corpus,
         k=10,
         name=f"t8_knn_{tag}",
@@ -1501,11 +1496,7 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_centroids,
         ivf_topk_multi,
     )
-    from hadoop_log_analysis_spark.streaming.retrieval import (
-        derive_query_drop_dir,
-        read_query_stream,
-        stream_knn,
-    )
+    from hadoop_log_analysis_spark.streaming.retrieval import stream_knn
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     out_dir = run_dir(spark, "stream_knn_ivf", sf_dir)
@@ -1514,9 +1505,8 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = ivf_centroids(corpus)
     r = REPLAY["knn"]
-    drop = derive_query_drop_dir(spark, sf_dir, n_files=r.files)
     result = stream_knn(
-        read_query_stream(spark, drop, r.mfpt),
+        feed_stream(spark, sf_dir, QUERY_VECTORS, r),
         corpus,
         k=10,
         name=f"t8_knn_ivf_{tag}",

@@ -23,6 +23,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The checkout root, which holds the package: Python workers import it
+# from here whatever directory the driver was started in.
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Dynamic SQL confs this engine requires regardless of who built the session.
 REQUIRED_CONFS: dict[str, str] = {
     # events.parquet carries TIMESTAMP(NANOS) which Spark 4.x cannot read
@@ -56,7 +60,9 @@ def get_spark(
 
     The master is ``local[$SPARK_GRAFT_CPUS]`` (fallback ``local[*]``).
     ``shuffle_partitions`` defaults to the core count — at fixture
-    scale AQE coalesces below it anyway.
+    scale AQE coalesces below it anyway. Python workers get the
+    checkout on their ``PYTHONPATH``, so a UDF that imports the
+    package runs from any working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -77,6 +83,8 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("HLA_DRIVER_MEM", "8g"))
+        # STATIC: read when the context starts, like the progress bar
+        .config("spark.executorEnv.PYTHONPATH", CHECKOUT)
         # Local-scale parallelism (measured, BASELINE.md methodology):
         # fixture files are ~1-30 MB, far under the 128 MB split default,
         # so scans would run single-task; 16 MB splits fan them out, and

@@ -26,10 +26,10 @@ sequential scan, which is what tests/test_streaming.py pins
 simulation over the batch-computed signatures, at two different
 microbatch widths).
 
-Determinism: the drop directory replays in event-time order
-(mtime-stamped range partitions, same scheme as events_stream), and
-within a microbatch each bucket group is sorted by (ts_us, doc_id)
-before the winner is chosen — so processing order == event order and
+Determinism: the ``events_stream.DOCS`` feed replays in arrival
+order (its synthetic clock is doc_id-derived), and within a
+microbatch each bucket group is sorted by (ts_us, doc_id) before the
+winner is chosen — so processing order == event order and
 ties are impossible (ts_us is doc_id-derived and unique). On a truly
 out-of-order live feed the operator degrades to first-PROCESSED-wins,
 which is the honest streaming semantic; the suppressed set changes
@@ -57,7 +57,7 @@ the full greedy answer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,63 +65,6 @@ from hadoop_log_analysis_spark.operators.dedup import (
     band_hash_expr,
     minhash_signature,
 )
-from hadoop_log_analysis_spark.scratch import cached
-
-# Synthetic arrival clock for the documents fixture (it has no event
-# time): doc_id seconds after 2024-01-01T00:00:00Z. Strictly
-# increasing in doc_id, so "arrival order" == doc_id order and every
-# ts is unique — the determinism contract above.
-DOCS_BASE_US = 1_704_067_200 * 1_000_000
-
-DOCS_DROP_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("source", T.StringType()),
-    ]
-)
-
-
-def derive_docs_drop_dir(
-    spark: SparkSession, sf_dir: str, n_files: int = 8
-) -> str:
-    """Write documents as ``n_files`` arrival-ordered JSON-lines files.
-
-    Same replay scheme as events_stream.derive_drop_dir: files are
-    range-partitioned on ts_us (file 0 = earliest) and mtime-stamped
-    strictly increasing, so a maxFilesPerTrigger stream replays the
-    feed in arrival order. Built once per input; deterministic content.
-    """
-    from hadoop_log_analysis_spark.sources.catalog import scan
-
-    def build(path: str) -> None:
-        docs = scan(spark, sf_dir, "documents").select(
-            "doc_id",
-            (F.lit(DOCS_BASE_US) + F.col("doc_id") * 1_000_000).alias("ts_us"),
-            "text",
-            "source",
-        )
-        (
-            docs.repartitionByRange(n_files, "ts_us")
-            .sortWithinPartitions("ts_us")
-            .write.mode("overwrite")
-            .json(path)
-        )
-
-    return cached(f"docs_drop_{n_files}f", sf_dir, build)
-
-
-def read_docs_stream(
-    spark: SparkSession, drop_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Streaming file source over a documents drop directory."""
-    return (
-        spark.readStream.schema(DOCS_DROP_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(drop_dir)
-    )
-
 
 _DUP_STATE_SCHEMA = T.StructType(
     [

@@ -41,68 +41,10 @@ import os
 import shutil
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from hadoop_log_analysis_spark.scratch import cached
 from hadoop_log_analysis_spark.streaming.events_stream import run_drain
-
-# Same synthetic arrival clock convention as docs_dedup.
-QUERY_BASE_US = 1_704_067_200 * 1_000_000
-
-QUERY_DROP_SCHEMA = T.StructType(
-    [
-        T.StructField("q_id", T.LongType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("qvec", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def derive_query_drop_dir(
-    spark: SparkSession, sf_dir: str, every: int = 25, n_files: int = 4
-) -> str:
-    """Write every ``every``-th embedding row as an arrival-ordered
-    JSON query feed (q_id, ts_us, qvec) of ``n_files`` files.
-
-    Vectors cross the JSON boundary exactly: float32 -> double is
-    value-preserving, Jackson emits the shortest round-trip decimal,
-    and the stream schema reads array<double> — so the streamed qvec
-    equals the batch ``CAST(embedding AS DOUBLE)`` element for
-    element, which is what lets the DuckDB oracle stay exact.
-    """
-    from hadoop_log_analysis_spark.sources.catalog import scan
-
-    def build(path: str) -> None:
-        queries = (
-            scan(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") % every == 0)
-            .select(
-                F.col("vec_id").alias("q_id"),
-                (F.lit(QUERY_BASE_US) + F.col("vec_id") * 1_000_000).alias("ts_us"),
-                F.col("embedding").cast("array<double>").alias("qvec"),
-            )
-        )
-        (
-            queries.repartitionByRange(n_files, "ts_us")
-            .sortWithinPartitions("ts_us")
-            .write.mode("overwrite")
-            .json(path)
-        )
-
-    return cached(f"emb_query_drop_{every}_{n_files}f", sf_dir, build)
-
-
-def read_query_stream(
-    spark: SparkSession, drop_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Streaming file source over a query-vector drop directory."""
-    return (
-        spark.readStream.schema(QUERY_DROP_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(drop_dir)
-    )
 
 
 def stream_knn(
@@ -112,7 +54,8 @@ def stream_knn(
     name: str,
     out_dir: str,
     ranker: Callable[[DataFrame], DataFrame] | None = None,
-    shuffle_partitions: int = 8,
+    *,
+    shuffle_partitions: int | None,
 ) -> DataFrame:
     """Drain a query stream through per-batch top-k retrieval.
 
@@ -125,6 +68,9 @@ def stream_knn(
     ``ivf_topk_multi`` closure for the corpus-past-broadcast route.
     ``shuffle_partitions`` applies for the drain, as in run_drain.
     Returns the read-back result for the whole drained feed.
+
+    ``queries_stream`` is the ``events_stream.QUERY_VECTORS`` feed
+    (q_id, ts_us, qvec).
     """
     from hadoop_log_analysis_spark.operators.similarity import (
         exact_topk_multi,

@@ -3,8 +3,9 @@
 The evidence machinery behind BASELINE.md's tri-scale claims: runs
 every `__spark_entry__.queries()` entry against its `oracle_sql()`
 string (rows + schema + order-insensitive value hash — the driver's
-exact comparator) and prints one line per rows-only/FAIL query plus a
-final `DONE: <n> mismatches over <m> queries` summary.
+exact comparator) and prints one line per query (``ok``, ``rows-only``
+or ``FAIL``) plus a final `DONE: <n> mismatches over <m> queries`
+summary.
 
 Usage:
     python scripts/parity_sweep.py [sf_dir] [query_name ...]
@@ -154,7 +155,7 @@ def main() -> int:
         if problems:
             bad += 1
             print(f"FAIL {name}: " + " | ".join(problems), flush=True)
-        elif os.environ.get("HLA_SWEEP_VERBOSE"):
+        else:
             # per-query ok lines so a partial long sweep (e.g. the sf1
             # probe over the full registry) still records its coverage
             print(f"ok {name}: {len(spdf)}", flush=True)

@@ -30,6 +30,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import shutil
@@ -55,17 +56,16 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from hadoop_log_analysis_spark.scratch import run_dir, stamp_replay_order
     from hadoop_log_analysis_spark.session import get_spark
-    from hadoop_log_analysis_spark.sources.catalog import scan
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
-        DOCS_BASE_US,
-        read_docs_stream,
         stream_minhash_dup_hits,
     )
     from hadoop_log_analysis_spark.streaming import events_stream
     from hadoop_log_analysis_spark.streaming.events_stream import (
+        DOCS,
+        Replay,
         ckpt_path,
+        feed_stream,
         run_drain,
     )
     from scripts.stream_state_skew import state_profile
@@ -83,46 +83,33 @@ def main() -> int:
     # allow 600 s per drain, double the default
     events_stream.DRAIN_TIMEOUT_S = 600
 
-    docs = scan(spark, args.sf_dir, "documents")
-    hot_text = (
-        docs.filter(F.col("doc_id") == 0).select("text").collect()[0][0]
-    )
-
-    feeds = {
-        "uniform": docs,
-        "hot": docs.withColumn(
+    def hot_rows(spark, sf_dir):
+        docs = DOCS.rows(spark, sf_dir)
+        hot_text = (
+            docs.filter(F.col("doc_id") == 0).select("text").collect()[0][0]
+        )
+        return docs.withColumn(
             "text",
             F.when(F.col("doc_id") % 5 == 1, F.lit(hot_text)).otherwise(
                 F.col("text")
             ),
-        ),
+        )
+
+    feeds = {
+        "uniform": DOCS,
+        "hot": dataclasses.replace(DOCS, kind="docs_hot_drop", rows=hot_rows),
     }
+    replay = Replay(8, 2)
 
     result = {}
-    for fname, fdf in feeds.items():
-        # probe-specific drop dir (same replay scheme as
-        # docs_dedup.derive_docs_drop_dir, built from the variant df)
-        drop = run_dir(spark, f"docs_drop_probe_{fname}", args.sf_dir)
-        shutil.rmtree(drop, ignore_errors=True)
-        (
-            fdf.select(
-                "doc_id",
-                (F.lit(DOCS_BASE_US) + F.col("doc_id") * 1_000_000).alias(
-                    "ts_us"
-                ),
-                "text",
-                "source",
-            )
-            .repartitionByRange(8, "ts_us")
-            .sortWithinPartitions("ts_us")
-            .write.mode("overwrite")
-            .json(drop)
-        )
-        stamp_replay_order(drop)
-
+    for fname, feed in feeds.items():
         table = f"dedup_state_{fname}"
-        hits = stream_minhash_dup_hits(read_docs_stream(spark, drop, 2))
-        out = run_drain(hits, table, "append")
+        hits = stream_minhash_dup_hits(
+            feed_stream(spark, args.sf_dir, feed, replay)
+        )
+        out = run_drain(
+            hits, table, "append", shuffle_partitions=replay.state_partitions
+        )
         n_hits = out.count()
         n_suppressed = out.select("doc_id").distinct().count()
         ckpt = ckpt_path(spark, table)

@@ -138,3 +138,13 @@ print(path)
         assert not os.path.exists(app_root), f"{app_root} left after exit"
     finally:
         shutil.rmtree(app_root, ignore_errors=True)
+
+
+def test_session_gives_python_workers_the_checkout(spark):
+    """Python workers import the package from the checkout root, not
+    from the driver's working directory: a script started elsewhere
+    must still run its UDFs."""
+    checkout = str(PKG.parent)
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.executorEnv.PYTHONPATH") == checkout
+    assert spark.sparkContext.environment.get("PYTHONPATH") == checkout

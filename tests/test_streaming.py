@@ -4,6 +4,8 @@ against DuckDB by test_oracle_parity / the driver already."""
 
 from __future__ import annotations
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_log_analysis_spark.queries import load_registry
@@ -47,11 +49,51 @@ def test_replay_table_ships_default_cadences():
         "psi_monitor": Replay(8, 2, 8),
         "minhash_dedup": Replay(8, 1, 16),
         "knn": Replay(4, 1, 8),
+        "watermark_late": Replay(8, 1, 8),
+        "sink_parquet": Replay(8, 2, 8),
+        "recovery": Replay(8, 1, None),
+        "static_join": Replay(8, 2, 8),
+        "cdc_apply": Replay(8, 2, None),
     }
     assert streaming_q.MINHASH_GROUPS_PER_BAND == 128
     assert streaming_q.T8_BUCKET_SECONDS == 4 * 3600
     assert events_stream.DRAIN_TIMEOUT_S == 300
     assert graph_q.BFS_CHECKPOINT_EVERY_K == 1
+
+
+# q_stream_python_datasource streams the app-log text files, not a feed
+DROP_FED = sorted(
+    n
+    for n in REGISTRY
+    if n.startswith("q_stream_") and n != "q_stream_python_datasource"
+)
+
+
+def test_every_drop_fed_query_takes_its_feed_from_replay(spark, monkeypatch):
+    """Each drop-fed q_stream_* lays out its feed at a REPLAY entry's
+    cadence, and every entry has a query. The writer is patched to
+    raise with the Replay it was handed, so no feed is built and no
+    drain runs."""
+    from hadoop_log_analysis_spark.queries import streaming_q
+    from hadoop_log_analysis_spark.streaming import events_stream
+
+    class Fed(Exception):
+        pass
+
+    def refuse(spark, sf_dir, feed, replay):
+        raise Fed(replay)
+
+    monkeypatch.setattr(events_stream, "write_feed", refuse)
+    monkeypatch.setattr(streaming_q, "write_feed", refuse)
+    used = set()
+    for name in DROP_FED:
+        with pytest.raises(Fed) as fed:
+            REGISTRY[name].fn(spark, SF0001)
+        replay = fed.value.args[0]
+        family = [f for f, r in REPLAY.items() if r is replay]
+        assert family, f"{name} fed at {replay}, not a REPLAY entry"
+        used.update(family)
+    assert used == set(REPLAY), f"entries without a query: {set(REPLAY) - used}"
 
 
 def test_watermark_append_emits_closed_windows_matching_batch(spark):
@@ -103,7 +145,8 @@ def test_watermark_drops_late_row_exact_count(spark, tmp_path):
     import os
 
     from hadoop_log_analysis_spark.streaming.events_stream import (
-        read_events_stream,
+        EVENTS,
+        read_feed,
         run_drain,
     )
 
@@ -136,19 +179,18 @@ def test_watermark_drops_late_row_exact_count(spark, tmp_path):
     base_m = os.path.getmtime(os.path.join(drop, "part-00000.json"))
     for i in range(len(files)):
         os.utime(os.path.join(drop, f"part-{i:05d}.json"), (base_m + 10 * i,) * 2)
-    events = read_events_stream(spark, drop, max_files_per_trigger=1)
+    replay = Replay(len(files), 1)
+    events = read_feed(spark, drop, EVENTS, replay)
     agg = (
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_drain(agg, "t4_latecase", "append")
+    out = run_drain(
+        agg, "t4_latecase", "append", shuffle_partitions=replay.state_partitions
+    )
     emitted = {(r["w"].start.isoformat(), r.n) for r in out.collect()}
     assert emitted == {("2024-01-01T00:00:00", 2)}
-
-
-import pandas as pd
-import pytest
 
 
 @pytest.mark.parametrize(
@@ -189,11 +231,13 @@ def test_stream_minhash_dedup_matches_greedy_simulation(spark):
         MINHASH_GROUPS_PER_BAND,
     )
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
-        derive_docs_drop_dir,
-        read_docs_stream,
         stream_minhash_dup_hits,
     )
-    from hadoop_log_analysis_spark.streaming.events_stream import run_drain
+    from hadoop_log_analysis_spark.streaming.events_stream import (
+        DOCS,
+        feed_stream,
+        run_drain,
+    )
 
     docs = scan(spark, SF0001, "documents").select("doc_id", "text")
     sig_rows = (
@@ -223,26 +267,21 @@ def test_stream_minhash_dedup_matches_greedy_simulation(spark):
     # deliberately tiny/odd G under the finest cadence (many buckets
     # per group x incremental state across 8 batches) — all must
     # produce the identical greedy hit multiset
-    shipped = REPLAY["minhash_dedup"]
     g = MINHASH_GROUPS_PER_BAND
     configs = [
-        (derive_docs_drop_dir(spark, SF0001), 1, None, 8),
-        (derive_docs_drop_dir(spark, SF0001), 4, None, 8),
-        (
-            derive_docs_drop_dir(spark, SF0001, n_files=shipped.files),
-            shipped.mfpt,
-            g,
-            shipped.state_partitions,
-        ),
-        (derive_docs_drop_dir(spark, SF0001, n_files=2), 3, g, 8),
-        (derive_docs_drop_dir(spark, SF0001), 1, 7, 8),
+        (Replay(8, 1), None),
+        (Replay(8, 4), None),
+        (REPLAY["minhash_dedup"], g),
+        (FOLDED, g),
+        (Replay(8, 1), 7),
     ]
-    for i, (drop, mfpt, groups, parts) in enumerate(configs):
+    for i, (replay, groups) in enumerate(configs):
         hits = stream_minhash_dup_hits(
-            read_docs_stream(spark, drop, mfpt), groups_per_band=groups
+            feed_stream(spark, SF0001, DOCS, replay), groups_per_band=groups
         )
         out = run_drain(
-            hits, f"test_mh_dedup_{i}", "append", shuffle_partitions=parts
+            hits, f"test_mh_dedup_{i}", "append",
+            shuffle_partitions=replay.state_partitions,
         )
         got = Counter(
             (r.doc_id, r.band_idx, r.winner_id) for r in out.collect()
@@ -275,23 +314,24 @@ def test_stream_knn_batch_boundary_invariant(spark, tmp_path):
     drained top-k must be IDENTICAL under different microbatch widths
     — and each query's rows must form a complete 1..k rank prefix."""
     from hadoop_log_analysis_spark.sources.catalog import scan as _scan
-    from hadoop_log_analysis_spark.streaming.retrieval import (
-        derive_query_drop_dir,
-        read_query_stream,
-        stream_knn,
+    from hadoop_log_analysis_spark.streaming.events_stream import (
+        QUERY_VECTORS,
+        feed_stream,
     )
+    from hadoop_log_analysis_spark.streaming.retrieval import stream_knn
 
     corpus = _scan(spark, SF0001, "embeddings").select("vec_id", "embedding")
-    drop = derive_query_drop_dir(spark, SF0001)
     results = {}
     for mfpt in (1, 4):
+        replay = Replay(4, mfpt)
         out_dir = str(tmp_path / f"test_knn_{mfpt}")
         df = stream_knn(
-            read_query_stream(spark, drop, mfpt),
+            feed_stream(spark, SF0001, QUERY_VECTORS, replay),
             corpus,
             k=10,
             name=f"test_knn_{mfpt}",
             out_dir=out_dir,
+            shuffle_partitions=replay.state_partitions,
         )
         results[mfpt] = {tuple(r) for r in df.collect()}
     assert results[1] == results[4]
@@ -314,12 +354,11 @@ def test_stream_knn_ivf_matches_batch_ranker(spark, tmp_path):
         ivf_centroids,
         ivf_topk_multi,
     )
-    from hadoop_log_analysis_spark.streaming.retrieval import (
-        QUERY_BASE_US,
-        derive_query_drop_dir,
-        read_query_stream,
-        stream_knn,
+    from hadoop_log_analysis_spark.streaming.events_stream import (
+        QUERY_VECTORS,
+        feed_stream,
     )
+    from hadoop_log_analysis_spark.streaming.retrieval import stream_knn
 
     corpus = scan(spark, SF0001, "embeddings").select(
         "vec_id", "embedding", "label"
@@ -337,16 +376,17 @@ def test_stream_knn_ivf_matches_batch_ranker(spark, tmp_path):
         tuple(r)
         for r in ivf_topk_multi(queries, corpus, cents, k=10, n_probe=2).collect()
     }
-    drop = derive_query_drop_dir(spark, SF0001)
+    replay = Replay(4, 2)
     streamed = {
         tuple(r)
         for r in stream_knn(
-            read_query_stream(spark, drop, 2),
+            feed_stream(spark, SF0001, QUERY_VECTORS, replay),
             corpus,
             k=10,
             name="test_knn_ivf",
             out_dir=str(tmp_path / "test_knn_ivf"),
             ranker=lambda b: ivf_topk_multi(b, corpus, cents, k=10, n_probe=2),
+            shuffle_partitions=replay.state_partitions,
         ).collect()
     }
     assert streamed == batch and streamed
@@ -373,11 +413,12 @@ def test_stream_minhash_dedup_ttl_horizon(spark, tmp_path):
 
     from hadoop_log_analysis_spark.scratch import stamp_replay_order
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
-        read_docs_stream,
         stream_minhash_dup_hits,
     )
     from hadoop_log_analysis_spark.streaming.events_stream import (
+        DOCS,
         ckpt_path,
+        read_feed,
         run_drain,
     )
 
@@ -423,10 +464,13 @@ def test_stream_minhash_dedup_ttl_horizon(spark, tmp_path):
             }) + "\n")
     stamp_replay_order(drop)
 
+    replay = Replay(len(files), 1)
     hits = stream_minhash_dup_hits(
-        read_docs_stream(spark, drop, 1), horizon_us=horizon
+        read_feed(spark, drop, DOCS, replay), horizon_us=horizon
     )
-    out = run_drain(hits, "test_mh_ttl", "append")
+    out = run_drain(
+        hits, "test_mh_ttl", "append", shuffle_partitions=replay.state_partitions
+    )
     got = sorted((r.doc_id, r.band_idx, r.winner_id) for r in out.collect())
     # F and H emit NOTHING: watermark filtering drops late input before
     # applyInPandasWithState (observed and pinned here — Spark filters
@@ -527,17 +571,17 @@ def test_flattened_drop_mtimes_keep_answers(spark):
         minhash_signature,
     )
     from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
-    from hadoop_log_analysis_spark.streaming.docs_dedup import (
-        derive_docs_drop_dir,
-    )
     from hadoop_log_analysis_spark.streaming.events_stream import (
-        derive_drop_dir,
+        DOCS,
+        EVENTS_WITH_DUPS,
+        EVENTS_WITH_SENTINELS,
+        write_feed,
     )
 
     drops = [
-        derive_drop_dir(spark, SF001, with_dups=True),
-        derive_drop_dir(spark, SF001, with_sentinel=True),
-        derive_docs_drop_dir(spark, SF001),
+        write_feed(spark, SF001, EVENTS_WITH_DUPS, REPLAY["dedup"]),
+        write_feed(spark, SF001, EVENTS_WITH_SENTINELS, REPLAY["left_join"]),
+        write_feed(spark, SF001, DOCS, REPLAY["minhash_dedup"]),
     ]
     for drop in drops:
         t = os.path.getmtime(drop)
@@ -597,8 +641,8 @@ def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
 
     from hadoop_log_analysis_spark.oracle import compare_frames, run_oracle
     from hadoop_log_analysis_spark.streaming.events_stream import (
-        DROP_SCHEMA,
-        derive_drop_dir,
+        EVENTS,
+        write_feed,
     )
 
     other = tmp_path / "other" / os.path.basename(SF0001)
@@ -614,14 +658,15 @@ def test_same_basename_inputs_get_their_own_drop_dirs(spark, tmp_path):
         else:
             os.symlink(os.path.join(SF0001, name), other / name)
 
-    first = derive_drop_dir(spark, SF0001)
-    second = derive_drop_dir(spark, str(other))
+    replay = Replay(8, 2)
+    first = write_feed(spark, SF0001, EVENTS, replay)
+    second = write_feed(spark, str(other), EVENTS, replay)
     assert first != second
     assert os.path.basename(SF0001) in os.path.basename(second)
     for drop, src in ((first, SF0001), (second, str(other))):
         with open(os.path.join(drop, "_READY")) as fh:
             assert fh.read() == os.path.realpath(src)
-    n_second = spark.read.schema(DROP_SCHEMA).json(second).count()
+    n_second = spark.read.schema(EVENTS.schema).json(second).count()
     assert n_second == halves["events"].num_rows
 
     for name in ("q_python_datasource", "q_bucketed_join"):
