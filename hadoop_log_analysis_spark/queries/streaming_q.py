@@ -69,37 +69,34 @@ T8_BUCKET_SECONDS = 4 * T8_INTERVAL_SECONDS
 
 
 # Replay cadence per query family, read at call time: every drop-fed
-# query names its family once and takes both its feed
-# (events_stream.feed_stream) and its drain's state partitions from
-# the entry. Every drained answer below is a pure function of the
-# replayed data, not of how it is batched (each query says why). The
-# oracle parity tests pin every entry; tests/test_streaming.py also
-# pins most families at a folded 2-file / mFPT=3 replay.
+# query names its family once and takes its feed
+# (events_stream.feed_stream) from the entry; its drain runs at the
+# core count (events_stream.run_drain). Every drained answer below is
+# a pure function of the replayed data, not of how it is batched or
+# partitioned (each query says why). The oracle parity tests pin
+# every entry; tests/test_streaming.py also pins most families at a
+# folded 2-file / mFPT=3 replay.
 REPLAY: dict[str, Replay] = {
     # complete-mode aggregations without a watermark: hourly_errors,
     # sliding_counts, sessions, ohlc
     "complete": Replay(8, 2),
     "dedup": Replay(8, 1),
-    # per-user applyInPandasWithState (stateful_counts, sequence_match):
-    # one Python call per user per batch, which parallelizes with tasks
-    "stateful": Replay(8, 1, 32),
+    # per-user applyInPandasWithState (stateful_counts, sequence_match)
+    "stateful": Replay(8, 1),
     "inner_join": Replay(8, 2),
     # mFPT=1: every sentinel of the left-outer joins is its own batch
     "left_join": Replay(8, 1),
     "heavy_hitters": Replay(8, 1),
     "psi_monitor": Replay(8, 2),
-    # bands x docs tiny bucket groups, see q_stream_minhash_dedup
-    "minhash_dedup": Replay(8, 1, 16),
+    "minhash_dedup": Replay(8, 1),
     # stateless retrieval over a 4-file query feed (q_stream_knn pair)
     "knn": Replay(4, 1),
     # mFPT=1: the watermark advances one time slice per batch
     "watermark_late": Replay(8, 1),
     "sink_parquet": Replay(8, 2),
-    # foreachBatch drains whose batches run their own batch jobs: the
-    # session's shuffle partitions stay as they are
-    "recovery": Replay(8, 1, None),
+    "recovery": Replay(8, 1),
     "static_join": Replay(8, 2),
-    "cdc_apply": Replay(8, 2, None),
+    "cdc_apply": Replay(8, 2),
 }
 
 # q_stream_minhash_dedup's bucket groups per band (G): one Python call
@@ -132,9 +129,7 @@ def q_stream_hourly_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("errors"))
     )
-    out = run_drain(
-        agg, "t1_hourly_errors", "complete", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(agg, "t1_hourly_errors", "complete")
     return out.select(_us(F.col("w.start")).alias("hr_us"), "errors").orderBy("hr_us")
 
 
@@ -160,9 +155,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_drain(
-        agg, "t2_sliding", "complete", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(agg, "t2_sliding", "complete")
     return out.select(_us(F.col("w.start")).alias("ws_us"), "n").orderBy("ws_us")
 
 
@@ -201,9 +194,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
         ).agg(F.count("*").alias("n"))
     )
-    out = run_drain(
-        agg, "t3_sessions", "complete", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(agg, "t3_sessions", "complete")
     return out.select(
         "user_id",
         _us(F.col("w.start")).alias("s_start_us"),
@@ -232,9 +223,7 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_drain(
-        agg, "t4_watermark", "append", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(agg, "t4_watermark", "append")
     return out.select(_us(F.col("w.start")).alias("hr_us"), "n").orderBy("hr_us")
 
 
@@ -264,9 +253,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = events.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = run_drain(
-        deduped, "t5_dedup", "append", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(deduped, "t5_dedup", "append")
     return (
         out.groupBy("event_type")
         .agg(F.count("*").alias("n"), F.countDistinct("event_id").alias("ids"))
@@ -329,9 +316,7 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_drain(
-        updates, "t6_stateful", "update", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(updates, "t6_stateful", "update")
     return (
         out.groupBy("user_id").agg(F.max("n_so_far").alias("n")).orderBy("user_id")
     )
@@ -365,10 +350,7 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    run_drain(
-        events, f"t7_sink_{tag}", foreach_batch=write_batch,
-        shuffle_partitions=r.state_partitions,
-    )
+    run_drain(events, f"t7_sink_{tag}", foreach_batch=write_batch)
     # explicit schema (stream schema + the batch_id partition dir):
     # a drained stream with zero batches reads back as empty, not as
     # an inference failure — quiet days are normal at scale.
@@ -439,10 +421,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"
         ),
     ).select("click_id", "purchase_id")
-    out = run_drain(
-        joined, "t8_stream_stream_join", "append",
-        shuffle_partitions=r.state_partitions,
-    )
+    out = run_drain(joined, "t8_stream_stream_join", "append")
     return out.orderBy("click_id", "purchase_id")
 
 
@@ -506,10 +485,7 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         bucket_seconds=T8_BUCKET_SECONDS,
         how="inner",
     ).select("click_id", "purchase_id")
-    out = run_drain(
-        joined, "t8_stream_stream_join_bkt", "append",
-        shuffle_partitions=r.state_partitions,
-    )
+    out = run_drain(joined, "t8_stream_stream_join_bkt", "append")
     return out.orderBy("click_id", "purchase_id")
 
 
@@ -561,7 +537,6 @@ def q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"recovery_{tag}",
             foreach_batch=write_batch,
             checkpoint=ckpt,
-            shuffle_partitions=r.state_partitions,
         )
 
     half = len(files) // 2
@@ -614,10 +589,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value") > F.col("av")
     )
     counts = joined.groupBy("event_type").agg(F.count("*").alias("n_above"))
-    out = run_drain(
-        counts, "t8_stream_static", "complete",
-        shuffle_partitions=r.state_partitions,
-    )
+    out = run_drain(counts, "t8_stream_static", "complete")
     return out.orderBy("event_type")
 
 
@@ -693,9 +665,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     ).select("click_id", "purchase_id")
-    out = run_drain(
-        joined, T8_LEFT_TABLE, "append", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(joined, T8_LEFT_TABLE, "append")
     return (
         out.filter(F.col("click_id") >= 0)
         .orderBy("click_id", "purchase_id")
@@ -772,9 +742,7 @@ def q_stream_stream_left_join_bucketed(
         watermark="2 hours",
         bucket_seconds=T8_BUCKET_SECONDS,
     ).select("click_id", "purchase_id")
-    out = run_drain(
-        joined, T8_LEFT_BKT_TABLE, "append", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(joined, T8_LEFT_BKT_TABLE, "append")
     return merge_bucketed_left(
         out.filter(F.col("click_id") >= 0), "click_id", "purchase_id"
     ).orderBy("click_id", "purchase_id")
@@ -840,10 +808,7 @@ def q_stream_stream_left_join_bucketed_payload(
         watermark="2 hours",
         bucket_seconds=T8_BUCKET_SECONDS,
     ).select("click_id", "c_ts", "purchase_id")
-    out = run_drain(
-        joined, T8_LEFT_BKT_PAYLOAD_TABLE, "append",
-        shuffle_partitions=r.state_partitions,
-    )
+    out = run_drain(joined, T8_LEFT_BKT_PAYLOAD_TABLE, "append")
     merged = merge_bucketed_left(
         out.filter(F.col("click_id") >= 0),
         "click_id",
@@ -949,10 +914,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     cands = (
-        run_drain(
-            updates, "t6_stream_hh", "update",
-            shuffle_partitions=r.state_partitions,
-        )
+        run_drain(updates, "t6_stream_hh", "update")
         .select("item")
         .distinct()
     )
@@ -1003,11 +965,8 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact count(DISTINCT) is unsupported inside a streaming agg;
     # drain the typed rows append-mode and aggregate exactly on the
     # drained batch — the streaming-transport / batch-finishing split
-    # the foreachBatch sink queries also use. Not a replay feed, and
-    # the stateless drain has no shuffle to size.
-    typed = run_drain(
-        stream, "t_stream_pysrc", "append", shuffle_partitions=None
-    )
+    # the foreachBatch sink queries also use. Not a replay feed.
+    typed = run_drain(stream, "t_stream_pysrc", "append")
     return (
         typed.groupBy("event_type")
         .agg(
@@ -1111,10 +1070,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         _us(F.col("ts")).alias("ts_us"),
     )
-    run_drain(
-        stream, f"cdc_apply_{tag}", foreach_batch=apply_batch,
-        shuffle_partitions=r.state_partitions,
-    )
+    run_drain(stream, f"cdc_apply_{tag}", foreach_batch=apply_batch)
 
     versions = _latest_versions()
     if not versions:  # zero-batch drain (empty fixture) -> empty result
@@ -1175,10 +1131,7 @@ def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = scan(spark, sf_dir, "events")
     b = _psi_reference(ev).localCheckpoint(eager=True)  # snapshot once
-    cb = run_drain(
-        _psi_binned(stream, b), "psi_monitor", "complete",
-        shuffle_partitions=r.state_partitions,
-    )
+    cb = run_drain(_psi_binned(stream, b), "psi_monitor", "complete")
     cut_ref = F.lit(_PSI_CUT).cast("timestamp")
     rb = _psi_binned(
         ev.filter(F.col("ts") < cut_ref).select("event_type", "value"), b
@@ -1276,9 +1229,7 @@ def q_stream_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_drain(
-        updates, "t6_stream_seq", "update", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(updates, "t6_stream_seq", "update")
     return (
         out.groupBy("user_id")
         .agg(
@@ -1344,9 +1295,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_sum("value").alias("volume"),
         )
     )
-    out = run_drain(
-        agg, "t1_ohlc", "complete", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(agg, "t1_ohlc", "complete")
     return out.select(
         _us(F.col("w.start")).alias("hr_us"),
         "open",
@@ -1392,18 +1341,14 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The stateful grouping is (band, pmod(bucket, G)) rather than one
     # group per bucket: the bucket -> group mapping is key-pure, so the
     # greedy answer is unchanged, and the per-group Python call cost
-    # amortizes over the group's buckets. State partitions run opposite
-    # to the joins': this op holds many tiny groups whose Python cost
-    # parallelizes with task count. The drained result is invariant
-    # under replay cadence, G and partition count.
+    # amortizes over the group's buckets. The drained result is
+    # invariant under replay cadence, G and partition count.
     r = REPLAY["minhash_dedup"]
     hits = stream_minhash_dup_hits(
         feed_stream(spark, sf_dir, DOCS, r),
         groups_per_band=MINHASH_GROUPS_PER_BAND,
     )
-    out = run_drain(
-        hits, "t5_minhash_dedup", "append", shuffle_partitions=r.state_partitions
-    )
+    out = run_drain(hits, "t5_minhash_dedup", "append")
     return (
         out.groupBy("doc_id")
         .agg(
@@ -1464,7 +1409,6 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10,
         name=f"t8_knn_{tag}",
         out_dir=out_dir,
-        shuffle_partitions=r.state_partitions,
     )
     return result.orderBy("q_id", "rn")
 
@@ -1514,6 +1458,5 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranker=lambda batch_df: ivf_topk_multi(
             batch_df, corpus, cents, k=10, n_probe=2
         ),
-        shuffle_partitions=r.state_partitions,
     )
     return result.orderBy("q_id", "rn")

@@ -31,9 +31,11 @@ from hadoop_log_analysis_spark.sources.catalog import scan
 )
 def q_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: row-at-a-time scalar Python UDF (the slow path, verified
-    against the equivalent SQL)."""
+    against the equivalent SQL). ``useArrow=False`` names that path
+    outright instead of leaving PySpark to infer it from the type
+    hints, which it cannot do for a plain ``str -> int`` function."""
 
-    @udf(returnType=T.LongType())
+    @udf(returnType=T.LongType(), useArrow=False)
     def len_mod(s: str) -> int:
         return len(s) % 97
 

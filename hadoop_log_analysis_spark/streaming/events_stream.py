@@ -59,13 +59,12 @@ ARRIVAL_BASE_US = 1_704_067_200 * 1_000_000
 @dataclass(frozen=True)
 class Replay:
     """How a query family replays its feed: ``files`` time-ordered
-    drop files, ``mfpt`` of them per microbatch (maxFilesPerTrigger),
-    and ``state_partitions`` state-store tasks for the drain (``None``
-    leaves the session's setting alone, see :func:`run_drain`)."""
+    drop files, ``mfpt`` of them per microbatch (maxFilesPerTrigger).
+    The drain's state-store task count is not a cadence: every drain
+    runs at the core count (:func:`run_drain`)."""
 
     files: int
     mfpt: int
-    state_partitions: int | None = 8
 
 
 @dataclass(frozen=True)
@@ -275,12 +274,18 @@ def ckpt_path(spark: SparkSession, name: str) -> str:
     return run_dir(spark, f"stream_ckpt_{name}")
 
 
+def _drain_partitions(spark: SparkSession) -> int:
+    """The shuffle (= state-store) partition count of every drain: one
+    task per core, so each microbatch commits its state stores in one
+    wave of tasks."""
+    return spark.sparkContext.defaultParallelism
+
+
 def run_drain(
     sdf: DataFrame,
     name: str,
     output_mode: str = "append",
     *,
-    shuffle_partitions: int | None,
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     checkpoint: str | None = None,
 ) -> DataFrame | None:
@@ -302,12 +307,13 @@ def run_drain(
     turn a re-run into a no-op. A caller-owned path is used as is, so
     a second drain over it resumes where the first stopped.
 
-    ``shuffle_partitions`` (a ``Replay.state_partitions``) sizes the
-    state-store TASK COUNT to the (tiny) state volume for the duration
-    of the drain and is restored afterwards (the per-microbatch cost of
-    these bounded replays is state tasks, not data). The count is
-    pinned at the checkpoint's batch 0, and results are partition-count
-    invariant. ``None`` leaves the session's setting alone.
+    The session's ``spark.sql.shuffle.partitions`` is set to
+    :func:`_drain_partitions` (the core count) for the duration of the
+    drain and restored afterwards: the per-microbatch cost of these
+    bounded replays is committing state stores, one task each, so one
+    wave of tasks is the least of it, whatever the session's own
+    setting (a bare session's 200 included). The count is pinned at the
+    checkpoint's batch 0, and results are partition-count invariant.
     """
     spark = sdf.sparkSession
     if checkpoint is None:
@@ -319,8 +325,7 @@ def run_drain(
     else:
         writer = writer.foreachBatch(foreach_batch)
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_drain_partitions(spark)))
     try:
         q = (
             writer.option("checkpointLocation", checkpoint)
@@ -330,9 +335,14 @@ def run_drain(
         if not q.awaitTermination(DRAIN_TIMEOUT_S):
             last = q.lastProgress
             q.stop()
+            seen = (
+                f"last batch {last['batchId']}: {last['numInputRows']} "
+                f"input rows, durationMs {last['durationMs']}"
+                if last
+                else "no batch completed"
+            )
             raise RuntimeError(
-                f"stream {name!r} did not drain within {DRAIN_TIMEOUT_S}s; "
-                f"last batch {last['batchId'] if last else None}"
+                f"stream {name!r} did not drain within {DRAIN_TIMEOUT_S}s; {seen}"
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)

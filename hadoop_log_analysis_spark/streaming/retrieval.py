@@ -54,8 +54,6 @@ def stream_knn(
     name: str,
     out_dir: str,
     ranker: Callable[[DataFrame], DataFrame] | None = None,
-    *,
-    shuffle_partitions: int | None,
 ) -> DataFrame:
     """Drain a query stream through per-batch top-k retrieval.
 
@@ -66,7 +64,6 @@ def stream_knn(
     ranker is the exact broadcast-corpus scan
     (operators.similarity.exact_topk_multi); pass an
     ``ivf_topk_multi`` closure for the corpus-past-broadcast route.
-    ``shuffle_partitions`` applies for the drain, as in run_drain.
     Returns the read-back result for the whole drained feed.
 
     ``queries_stream`` is the ``events_stream.QUERY_VECTORS`` feed
@@ -89,10 +86,7 @@ def stream_knn(
             .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
         )
 
-    run_drain(
-        queries_stream, name, foreach_batch=write_batch,
-        shuffle_partitions=shuffle_partitions,
-    )
+    run_drain(queries_stream, name, foreach_batch=write_batch)
     sink_schema = T.StructType(
         [
             T.StructField("q_id", T.LongType()),

@@ -107,9 +107,7 @@ def main() -> int:
         hits = stream_minhash_dup_hits(
             feed_stream(spark, args.sf_dir, feed, replay)
         )
-        out = run_drain(
-            hits, table, "append", shuffle_partitions=replay.state_partitions
-        )
+        out = run_drain(hits, table, "append")
         n_hits = out.count()
         n_suppressed = out.select("doc_id").distinct().count()
         ckpt = ckpt_path(spark, table)

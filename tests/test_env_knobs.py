@@ -1,10 +1,10 @@
 """The package reads no tuning knobs from the environment: replay
-cadences, state partitions, widths and timeouts are module constants
-(streaming_q.REPLAY and friends). Only the deployment settings in
-session.py may come from the environment. Likewise only scratch.py
-names a place on disk to write to, and only scratch.py reads a Spark
-application id: it keys everything an application keeps and removes
-the application's run dirs when the process exits."""
+cadences, widths and timeouts are module constants (streaming_q.REPLAY
+and friends), and drains run at the core count. Only the deployment
+settings in session.py may come from the environment. Likewise only
+scratch.py names a place on disk to write to, and only scratch.py
+reads a Spark application id: it keys everything an application keeps
+and removes the application's run dirs when the process exits."""
 
 from __future__ import annotations
 

@@ -34,26 +34,26 @@ def _oracle_parity_at(spark, monkeypatch, qname, family, replays):
 
 
 def test_replay_table_ships_default_cadences():
-    """The shipped cadences: files / mFPT / state partitions per query
-    family, plus the plain constants that replaced env overrides."""
+    """The shipped cadences: files / mFPT per query family, plus the
+    plain constants that replaced env overrides."""
     from hadoop_log_analysis_spark.queries import graph_q, streaming_q
     from hadoop_log_analysis_spark.streaming import events_stream
 
     assert REPLAY == {
-        "complete": Replay(8, 2, 8),
-        "dedup": Replay(8, 1, 8),
-        "stateful": Replay(8, 1, 32),
-        "inner_join": Replay(8, 2, 8),
-        "left_join": Replay(8, 1, 8),
-        "heavy_hitters": Replay(8, 1, 8),
-        "psi_monitor": Replay(8, 2, 8),
-        "minhash_dedup": Replay(8, 1, 16),
-        "knn": Replay(4, 1, 8),
-        "watermark_late": Replay(8, 1, 8),
-        "sink_parquet": Replay(8, 2, 8),
-        "recovery": Replay(8, 1, None),
-        "static_join": Replay(8, 2, 8),
-        "cdc_apply": Replay(8, 2, None),
+        "complete": Replay(8, 2),
+        "dedup": Replay(8, 1),
+        "stateful": Replay(8, 1),
+        "inner_join": Replay(8, 2),
+        "left_join": Replay(8, 1),
+        "heavy_hitters": Replay(8, 1),
+        "psi_monitor": Replay(8, 2),
+        "minhash_dedup": Replay(8, 1),
+        "knn": Replay(4, 1),
+        "watermark_late": Replay(8, 1),
+        "sink_parquet": Replay(8, 2),
+        "recovery": Replay(8, 1),
+        "static_join": Replay(8, 2),
+        "cdc_apply": Replay(8, 2),
     }
     assert streaming_q.MINHASH_GROUPS_PER_BAND == 128
     assert streaming_q.T8_BUCKET_SECONDS == 4 * 3600
@@ -94,6 +94,62 @@ def test_every_drop_fed_query_takes_its_feed_from_replay(spark, monkeypatch):
         assert family, f"{name} fed at {replay}, not a REPLAY entry"
         used.update(family)
     assert used == set(REPLAY), f"entries without a query: {set(REPLAY) - used}"
+
+
+def test_drain_checkpoint_pins_core_count(spark):
+    """A drain runs its state stores at the core count whatever the
+    session says: under a bare session's 200 partitions, the
+    count its checkpoint pins at batch 0 is defaultParallelism, and the
+    session's own setting is back afterwards."""
+    import json
+    import os
+
+    from hadoop_log_analysis_spark.streaming.events_stream import (
+        EVENTS,
+        ckpt_path,
+        feed_stream,
+        run_drain,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        counts = feed_stream(spark, SF0001, EVENTS, FOLDED).groupBy(
+            "event_type"
+        ).count()
+        assert run_drain(counts, "test_drain_cores", "complete").count() > 0
+        assert spark.conf.get(key) == "200"
+    finally:
+        spark.conf.set(key, old)
+    offsets = os.path.join(ckpt_path(spark, "test_drain_cores"), "offsets", "0")
+    with open(offsets) as fh:
+        metadata = json.loads(fh.read().splitlines()[1])
+    assert metadata["conf"][key] == str(spark.sparkContext.defaultParallelism)
+
+
+def test_drain_timeout_names_stream_and_last_progress(spark, monkeypatch):
+    """A drain past DRAIN_TIMEOUT_S stops its query and raises with the
+    stream's name and the last progress it saw: batch 0 finishes, then
+    the callback holds batch 1 past the deadline."""
+    import time
+
+    from hadoop_log_analysis_spark.streaming import events_stream
+
+    def hold(batch_df, batch_id):
+        if batch_id > 0:
+            time.sleep(events_stream.DRAIN_TIMEOUT_S + 2)
+
+    monkeypatch.setattr(events_stream, "DRAIN_TIMEOUT_S", 4)
+    stream = events_stream.feed_stream(
+        spark, SF0001, events_stream.EVENTS, Replay(2, 1)
+    )
+    with pytest.raises(RuntimeError) as err:
+        events_stream.run_drain(stream, "test_drain_timeout", foreach_batch=hold)
+    msg = str(err.value)
+    assert "stream 'test_drain_timeout' did not drain within 4s" in msg
+    assert "last batch 0: " in msg and "input rows, durationMs" in msg, msg
+    assert not any(q.name == "test_drain_timeout" for q in spark.streams.active)
 
 
 def test_watermark_append_emits_closed_windows_matching_batch(spark):
@@ -186,9 +242,7 @@ def test_watermark_drops_late_row_exact_count(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_drain(
-        agg, "t4_latecase", "append", shuffle_partitions=replay.state_partitions
-    )
+    out = run_drain(agg, "t4_latecase", "append")
     emitted = {(r["w"].start.isoformat(), r.n) for r in out.collect()}
     assert emitted == {("2024-01-01T00:00:00", 2)}
 
@@ -215,12 +269,13 @@ def test_stream_stream_left_join_parity_at_bench_mfpt(spark, monkeypatch, qname)
     )
 
 
-def test_stream_minhash_dedup_matches_greedy_simulation(spark):
+def test_stream_minhash_dedup_matches_greedy_simulation(spark, monkeypatch):
     """T5xL2 (streaming.docs_dedup): the drained dup-hit multiset must
     equal an exact Python greedy simulation of first-seen-per-bucket
-    over the batch-computed signatures — at TWO microbatch widths, so
-    the winner/hit assignment is batch-boundary invariant — and the
-    kept set must equal the simulation's keepers."""
+    over the batch-computed signatures — at TWO microbatch widths and
+    two state-partition counts, so the winner/hit assignment is
+    batch-boundary and partition-count invariant — and the kept set
+    must equal the simulation's keepers."""
     from collections import Counter
 
     from hadoop_log_analysis_spark.operators.dedup import (
@@ -233,6 +288,7 @@ def test_stream_minhash_dedup_matches_greedy_simulation(spark):
     from hadoop_log_analysis_spark.streaming.docs_dedup import (
         stream_minhash_dup_hits,
     )
+    from hadoop_log_analysis_spark.streaming import events_stream
     from hadoop_log_analysis_spark.streaming.events_stream import (
         DOCS,
         feed_stream,
@@ -260,29 +316,33 @@ def test_stream_minhash_dedup_matches_greedy_simulation(spark):
                 seen[(bi, bh)] = r.doc_id
     assert expected, "fixture should contain near-duplicates"
 
-    # replay configs: the per-bucket path on the 8-file dir at two
+    # replay configs (cadence, G, state partitions; None = the drain's
+    # core count): the per-bucket path on the 8-file dir at two
     # microbatch widths; the coarse-grouped path at the shipped
-    # q_stream_minhash_dedup config (8 files, mFPT=1, G=128, 16 state
-    # partitions) and at the folded 2-file / mFPT=3 one; and a
+    # q_stream_minhash_dedup config (8 files, mFPT=1, G=128) and at the
+    # folded 2-file / mFPT=3 one over an odd 7 state partitions; and a
     # deliberately tiny/odd G under the finest cadence (many buckets
     # per group x incremental state across 8 batches) — all must
     # produce the identical greedy hit multiset
     g = MINHASH_GROUPS_PER_BAND
+    cores = events_stream._drain_partitions
     configs = [
-        (Replay(8, 1), None),
-        (Replay(8, 4), None),
-        (REPLAY["minhash_dedup"], g),
-        (FOLDED, g),
-        (Replay(8, 1), 7),
+        (Replay(8, 1), None, None),
+        (Replay(8, 4), None, None),
+        (REPLAY["minhash_dedup"], g, None),
+        (FOLDED, g, 7),
+        (Replay(8, 1), 7, None),
     ]
-    for i, (replay, groups) in enumerate(configs):
+    for i, (replay, groups, parts) in enumerate(configs):
+        monkeypatch.setattr(
+            events_stream,
+            "_drain_partitions",
+            cores if parts is None else lambda spark: parts,
+        )
         hits = stream_minhash_dup_hits(
             feed_stream(spark, SF0001, DOCS, replay), groups_per_band=groups
         )
-        out = run_drain(
-            hits, f"test_mh_dedup_{i}", "append",
-            shuffle_partitions=replay.state_partitions,
-        )
+        out = run_drain(hits, f"test_mh_dedup_{i}", "append")
         got = Counter(
             (r.doc_id, r.band_idx, r.winner_id) for r in out.collect()
         )
@@ -331,7 +391,6 @@ def test_stream_knn_batch_boundary_invariant(spark, tmp_path):
             k=10,
             name=f"test_knn_{mfpt}",
             out_dir=out_dir,
-            shuffle_partitions=replay.state_partitions,
         )
         results[mfpt] = {tuple(r) for r in df.collect()}
     assert results[1] == results[4]
@@ -386,7 +445,6 @@ def test_stream_knn_ivf_matches_batch_ranker(spark, tmp_path):
             name="test_knn_ivf",
             out_dir=str(tmp_path / "test_knn_ivf"),
             ranker=lambda b: ivf_topk_multi(b, corpus, cents, k=10, n_probe=2),
-            shuffle_partitions=replay.state_partitions,
         ).collect()
     }
     assert streamed == batch and streamed
@@ -468,9 +526,7 @@ def test_stream_minhash_dedup_ttl_horizon(spark, tmp_path):
     hits = stream_minhash_dup_hits(
         read_feed(spark, drop, DOCS, replay), horizon_us=horizon
     )
-    out = run_drain(
-        hits, "test_mh_ttl", "append", shuffle_partitions=replay.state_partitions
-    )
+    out = run_drain(hits, "test_mh_ttl", "append")
     got = sorted((r.doc_id, r.band_idx, r.winner_id) for r in out.collect())
     # F and H emit NOTHING: watermark filtering drops late input before
     # applyInPandasWithState (observed and pinned here — Spark filters
@@ -509,13 +565,15 @@ def test_stateful_pair_parity_at_folded_replay(spark, monkeypatch, qname):
     """The two per-user applyInPandasWithState drains. The drained
     answer is a per-user max of monotone running values, so it must
     be batching- and partition-count-invariant: pinned at the shipped
-    cadence (8 files, mFPT=1, 32 state partitions) and folded into one
-    microbatch over 4 partitions, so a regression in the in-batch
-    (ts, event_id) sort or the monotonicity argument fails loudly."""
-    _oracle_parity_at(
-        spark, monkeypatch, qname, "stateful",
-        [REPLAY["stateful"], Replay(2, 3, 4)],
-    )
+    cadence (8 files, mFPT=1) over the drain's core count, and folded
+    into one microbatch over an odd 7 state partitions, so a
+    regression in the in-batch (ts, event_id) sort or the monotonicity
+    argument fails loudly."""
+    from hadoop_log_analysis_spark.streaming import events_stream
+
+    _oracle_parity_at(spark, monkeypatch, qname, "stateful", [REPLAY["stateful"]])
+    monkeypatch.setattr(events_stream, "_drain_partitions", lambda spark: 7)
+    _oracle_parity_at(spark, monkeypatch, qname, "stateful", [FOLDED])
 
 
 def test_stream_dedup_parity_at_folded_replay(spark, monkeypatch):
